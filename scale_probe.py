@@ -553,6 +553,7 @@ def probe_emb_extras(spark, src_sf: str, probe_root: str) -> None:
     brute force at 50x scale; (2) the 550x decontam natural-gate leg."""
     from pyspark.sql import functions as F
 
+    from tomixpanel_spark.knobs import knob
     from tomixpanel_spark.operators import similarity as S
     from tomixpanel_spark.operators.base import table
 
@@ -602,7 +603,7 @@ def probe_emb_extras(spark, src_sf: str, probe_root: str) -> None:
     emb = S.ensure_parallel(table(spark, dst, "embeddings"), "vec_id")
     held = emb.filter(F.col("label") == 0)
     train = emb.filter(F.col("label") != 0)
-    assert held.count() > S._emb_bcast_cap(), "held-out side must exceed gate"
+    assert held.count() > knob("TOMIX_EMB_BCAST_VECS"), "held-out side must exceed gate"
     t0 = time.perf_counter()
     natural = _spark_checksum(S.embedding_decontam_pairs(train, held))
     t_nat = time.perf_counter() - t0

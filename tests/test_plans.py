@@ -155,9 +155,9 @@ def test_connected_components_local_matches_distributed(spark, monkeypatch):
         (f"n{rng.randrange(120)}", f"n{rng.randrange(120)}") for _ in range(200)
     ] + [("iso1", "iso2")]
     edges = spark.createDataFrame(rows, "id_a string, id_b string")
-    monkeypatch.setattr(idmod, "LOCAL_EDGE_THRESHOLD", 10**9)
+    monkeypatch.setenv("TOMIX_CC_LOCAL_MAX", "1000000000")
     local = {(r["node"], r["component"]) for r in idmod.connected_components(edges).collect()}
-    monkeypatch.setattr(idmod, "LOCAL_EDGE_THRESHOLD", 0)
+    monkeypatch.setenv("TOMIX_CC_LOCAL_MAX", "0")
     dist = {(r["node"], r["component"]) for r in idmod.connected_components(edges).collect()}
     assert local == dist
     assert ("iso1", "iso1") in local and ("iso2", "iso1") in local
@@ -165,7 +165,7 @@ def test_connected_components_local_matches_distributed(spark, monkeypatch):
     # records its label-propagation round count; the local run clears it
     assert idmod.LAST_DISTRIBUTED_ROUNDS is not None
     assert 1 <= idmod.LAST_DISTRIBUTED_ROUNDS <= idmod.MAX_ITERATIONS
-    monkeypatch.setattr(idmod, "LOCAL_EDGE_THRESHOLD", 10**9)
+    monkeypatch.setenv("TOMIX_CC_LOCAL_MAX", "1000000000")
     idmod.connected_components(edges).collect()
     assert idmod.LAST_DISTRIBUTED_ROUNDS is None
 
@@ -182,7 +182,7 @@ def test_connected_components_deep_chain_converges(spark, monkeypatch):
         [(f"n{i:04d}", f"n{i + 1:04d}") for i in range(200)],
         "id_a string, id_b string",
     )
-    monkeypatch.setattr(idmod, "LOCAL_EDGE_THRESHOLD", 0)
+    monkeypatch.setenv("TOMIX_CC_LOCAL_MAX", "0")
     out = {tuple(r) for r in idmod.connected_components(edges).collect()}
     assert out == {(f"n{i:04d}", "n0000") for i in range(201)}
 
@@ -197,12 +197,63 @@ def test_cc_probe_is_single_bounded_collect(spark, monkeypatch):
     edges = spark.createDataFrame(
         [(f"a{i}", f"b{i}") for i in range(5)], "id_a string, id_b string"
     )
-    monkeypatch.setattr(idmod, "LOCAL_EDGE_THRESHOLD", 5)  # == distinct count
+    monkeypatch.setenv("TOMIX_CC_LOCAL_MAX", "5")  # == distinct count
     _, rows = idmod.connected_components_with_rows(edges)
     assert rows is not None and len(rows) == 10  # 5 edges -> 10 nodes
-    monkeypatch.setattr(idmod, "LOCAL_EDGE_THRESHOLD", 4)  # one under
+    monkeypatch.setenv("TOMIX_CC_LOCAL_MAX", "4")  # one under
     _, rows = idmod.connected_components_with_rows(edges)
     assert rows is None  # distributed path
+
+
+def _jobs_run(spark, group, fn):
+    """(fn(), number of Spark jobs fn ran), counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize(
+    "n_rows, cap, collected",
+    [(5, 5, True), (6, 5, False), (3, 0, False), (0, 5, True)],
+    ids=["exactly-cap", "cap-plus-one", "cap-zero", "empty"],
+)
+def test_collect_under(spark, n_rows, cap, collected):
+    """The one bounded gate probe: the whole frame at or under the cap,
+    None one row over it, and None without running a job at cap 0."""
+    from tomixpanel_spark.operators.base import collect_under
+
+    df = spark.range(n_rows)
+    pdf, jobs = _jobs_run(
+        spark, f"collect_under_{n_rows}_{cap}", lambda: collect_under(df, cap)
+    )
+    if collected:
+        assert sorted(pdf["id"].tolist()) == list(range(n_rows))
+    else:
+        assert pdf is None
+    assert (jobs == 0) if cap <= 0 else (jobs >= 1)
+
+
+def test_memo_count_counts_a_key_once(spark):
+    """A repeated key is served from the memo: no second count job, and a
+    frame builder is not even called."""
+    from tomixpanel_spark.operators.base import memo_count
+
+    df = spark.range(7)
+    key = ("test_memo_count", "n")
+    first, jobs1 = _jobs_run(spark, "memo_count_1", lambda: memo_count(spark, key, df))
+    again, jobs2 = _jobs_run(spark, "memo_count_2", lambda: memo_count(spark, key, df))
+    assert first == again == 7
+    assert jobs1 >= 1 and jobs2 == 0
+
+    def must_not_build():
+        raise AssertionError("builder called on a memo hit")
+
+    assert memo_count(spark, key, must_not_build) == 7
 
 
 def test_carry_ntoks_rides_the_pair_edges(spark):
@@ -231,6 +282,17 @@ def test_carry_ntoks_rides_the_pair_edges(spark):
     }
     for r in carried:
         assert r["nt_a"] == ntok[r["doc_a"]] and r["nt_b"] == ntok[r["doc_b"]]
+
+
+def test_carry_ntoks_rejects_the_capped_path(spark):
+    """carry_ntoks is an uncapped-path feature: asking for it together
+    with df_cap is a caller error, raised as ValueError (an assert would
+    vanish under python -O)."""
+    from tomixpanel_spark.operators.dedup import near_dup_pairs
+
+    docs = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="carry_ntoks"):
+        near_dup_pairs(docs, df_cap=10, carry_ntoks=True)
 
 
 def test_edge_node_attrs_dedups_to_one_signal_per_node(spark):
@@ -337,10 +399,10 @@ def test_tfidf_df_is_broadcast_join_not_token_window(spark, monkeypatch):
     groupBy(token).count() broadcast-joined back to tf — NEVER a
     COUNT(*) OVER (PARTITION BY token) window, which funnels every tf
     row of a hot token ("the") into one task's sort at corpus scale."""
-    from tomixpanel_spark.operators import textops
+    from tomixpanel_spark.operators.base import _COUNT_MEMO
 
     monkeypatch.setenv("TOMIX_TFIDF_DRIVER_FOLD_DOCS", "0")
-    textops._VOCAB_COUNT_CACHE.clear()
+    _COUNT_MEMO.clear()
     df = REG["tfidf_keywords"].fn(spark, SF_ORACLE)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan
@@ -364,11 +426,11 @@ def test_tfidf_driver_fold_is_shuffle_free(spark):
 def test_tfidf_paths_agree(spark, monkeypatch):
     """Driver-fold and distributed plans are ONE operator: identical rows
     on the same corpus."""
-    from tomixpanel_spark.operators import textops
+    from tomixpanel_spark.operators.base import _COUNT_MEMO
 
     fold = REG["tfidf_keywords"].fn(spark, SF_ORACLE).collect()
     monkeypatch.setenv("TOMIX_TFIDF_DRIVER_FOLD_DOCS", "0")
-    textops._VOCAB_COUNT_CACHE.clear()
+    _COUNT_MEMO.clear()
     dist = REG["tfidf_keywords"].fn(spark, SF_ORACLE).collect()
     assert sorted(map(tuple, fold)) == sorted(map(tuple, dist))
 
@@ -890,12 +952,12 @@ def test_tfidf_vocab_gate_flips_to_shuffle_join(spark, monkeypatch):
     flips to a shuffle join (mirroring decontam's held-out gate), with
     runtime bloom-filter injection enabled for map-side pruning."""
     from tests.conftest import SF_ORACLE
-    from tomixpanel_spark.operators import textops
+    from tomixpanel_spark.operators.base import _COUNT_MEMO
     from tomixpanel_spark.plans.audit import join_strategies
 
     monkeypatch.setenv("TOMIX_TFIDF_DRIVER_FOLD_DOCS", "0")
     monkeypatch.setenv("TOMIX_TFIDF_BCAST_VOCAB", "0")
-    textops._VOCAB_COUNT_CACHE.clear()
+    _COUNT_MEMO.clear()
     df = REG["tfidf_keywords"].fn(spark, SF_ORACLE)
     joins = join_strategies(df)
     assert "BroadcastHashJoin" not in joins
@@ -906,11 +968,11 @@ def test_mixture_rebalance_gate_flips_to_shuffle_join(spark, monkeypatch):
     """Past the bucket-domain cap the rates side must NOT broadcast —
     the runtime gate (round-7 advice: gate, not convention) flips to a
     shuffle join with bloom-filter injection, same answers."""
-    from tomixpanel_spark.operators import textops
+    from tomixpanel_spark.operators.base import _COUNT_MEMO
 
     base = REG["mixture_rebalance"].fn(spark, SF_ORACLE)
     monkeypatch.setenv("TOMIX_MIXTURE_BCAST_BUCKETS", "0")
-    textops._VOCAB_COUNT_CACHE.clear()
+    _COUNT_MEMO.clear()
     gated = REG["mixture_rebalance"].fn(spark, SF_ORACLE)
     joins = join_strategies(gated)
     assert "BroadcastHashJoin" not in joins
@@ -1075,18 +1137,23 @@ def test_substring_clean_paths_agree_and_broadcast(spark, monkeypatch):
 
 
 def test_gates_doc_matches_code():
-    """GATES.md is the single ops reference for every TOMIX_* variable;
-    this grep-check makes it impossible for a new gate to ship
-    undocumented (or for the doc to advertise a gate the code dropped)."""
+    """GATES.md is the single ops reference for every TOMIX_* variable:
+    it must name exactly the engine's knob table plus the variables the
+    harness scripts read, so a new gate cannot ship undocumented (nor the
+    doc advertise a gate the code dropped). And the knob table must be
+    the engine's ONLY reader: no other tomixpanel_spark module that
+    touches the process environment may name a TOMIX_* variable."""
+    import ast
     import re
     from pathlib import Path
 
+    from tomixpanel_spark.knobs import KNOBS
+
     root = Path(__file__).resolve().parents[1]
     pat = re.compile(r"TOMIX_[A-Z0-9_]+")
-    in_code: set[str] = set()
+    in_code = set(KNOBS)
     for src in [root / "bench.py", root / "scale_probe.py",
-                root / "__spark_entry__.py",
-                *sorted((root / "tomixpanel_spark").rglob("*.py"))]:
+                root / "__spark_entry__.py"]:
         in_code |= set(pat.findall(src.read_text()))
     in_doc = set(pat.findall((root / "GATES.md").read_text()))
     missing_from_doc = sorted(in_code - in_doc)
@@ -1094,12 +1161,52 @@ def test_gates_doc_matches_code():
     assert not missing_from_doc, f"undocumented gates: {missing_from_doc}"
     assert not stale_in_doc, f"GATES.md rows with no code: {stale_in_doc}"
 
+    pkg = root / "tomixpanel_spark"
+    env_readers = []
+    for src in sorted(pkg.rglob("*.py")):
+        if src == pkg / "knobs.py":
+            continue
+        nodes = list(ast.walk(ast.parse(src.read_text())))
+        touches_env = any(
+            (isinstance(n, ast.Attribute) and n.attr in ("environ", "getenv"))
+            or (isinstance(n, ast.Name) and n.id in ("environ", "getenv"))
+            for n in nodes
+        )
+        names_knob = any(
+            isinstance(n, ast.Constant)
+            and isinstance(n.value, str)
+            and n.value.startswith("TOMIX_")
+            for n in nodes
+        )
+        if touches_env and names_knob:
+            env_readers.append(str(src.relative_to(root)))
+    assert not env_readers, f"TOMIX_* read outside knobs.py: {env_readers}"
+
+
+@pytest.mark.parametrize(
+    "name, raw, value",
+    [
+        ("TOMIX_CC_LOCAL_MAX", "0", 0),
+        ("TOMIX_CACHE_PARTS_MIN_MB", "0.4", 0.4),
+        ("TOMIX_CACHE_TABLES", "1", True),
+        ("TOMIX_CACHE_TABLES", "", False),
+        ("TOMIX_CHECKPOINT_DIR", "/ck", "/ck"),
+    ],
+)
+def test_knob_parses_by_default_type(monkeypatch, name, raw, value):
+    from tomixpanel_spark.knobs import KNOBS, knob
+
+    monkeypatch.delenv(name, raising=False)
+    assert knob(name) == KNOBS[name].default
+    monkeypatch.setenv(name, raw)
+    assert knob(name) == value and type(knob(name)) is type(value)
+
 
 def test_bigram_lm_paths_agree(spark, monkeypatch):
     """Driver-fold, broadcast-model, and shuffle-join scoring plans are
     ONE operator: identical rows, and each gate actually flips the
     plan."""
-    from tomixpanel_spark.operators import textops
+    from tomixpanel_spark.operators.base import _COUNT_MEMO
 
     fold = REG["bigram_lm_score"].fn(spark, SF_ORACLE).collect()  # under fold cap
 
@@ -1109,14 +1216,14 @@ def test_bigram_lm_paths_agree(spark, monkeypatch):
     bcast = df_b.collect()
 
     monkeypatch.setenv("TOMIX_LM_BCAST_BIGRAMS", "0")
-    textops._LM_MODEL_COUNT_CACHE.clear()
+    _COUNT_MEMO.clear()
     df_s = REG["bigram_lm_score"].fn(spark, SF_ORACLE)
     joins = join_strategies(df_s)
     # the model/ctx scoring joins must NOT broadcast above the gate (the
     # 1-row vocab aggregate and the small final left join may still)
     assert any(j in ("SortMergeJoin", "ShuffledHashJoin") for j in joins)
     shuf = df_s.collect()
-    textops._LM_MODEL_COUNT_CACHE.clear()
+    _COUNT_MEMO.clear()
     assert sorted(map(tuple, bcast)) == sorted(map(tuple, shuf))
     assert sorted(map(tuple, fold)) == sorted(map(tuple, bcast))
 

@@ -253,6 +253,31 @@ class TestHttpSink:
         finally:
             s.stop()
 
+    def test_transport_type_error_is_one_failed_attempt(self, spark, stub):
+        """A transport that raises TypeError AFTER its POST went out is
+        one failed attempt like any other error: the sink must not retry
+        it with a different argument list, which would re-send the batch
+        outside the attempt budget (or fail the task)."""
+        from tomixpanel_spark.sinks.http import (
+            HttpSink,
+            HttpSinkConfig,
+            mp_event_record,
+            urllib_transport,
+        )
+
+        def posts_then_raises(url, body, headers, method):
+            urllib_transport(url, body, headers, method)
+            raise TypeError("response handling failed after the POST")
+
+        cfg = HttpSinkConfig(url=stub.url, max_attempts=2, backoff_s=0.01)
+        receipts = HttpSink(cfg, mp_event_record, transport=posts_then_raises).send(
+            _events_df(spark, 10), concurrency=1
+        ).collect()
+        assert len(receipts) == 1
+        assert receipts[0]["status"] == -1 and not receipts[0]["ok"]
+        assert receipts[0]["attempts"] == 2
+        assert len(stub.requests) == 2  # exactly one POST per attempt
+
 
 class TestSources:
     def test_amplitude_hour_slices_and_fetch(self, spark, tmp_path):

@@ -56,19 +56,6 @@ def _tokens_col(c: Column) -> Column:
     )
 
 
-def bpe_ish_tokens(text: Column | str) -> Column:
-    """BPE-ish sub-word split: word pieces, numbers, and punctuation runs.
-
-    A regex approximation of byte-pair tokenizer pre-splitting (word /
-    number / punctuation boundaries), good enough for token-count budgeting.
-    """
-    c = F.col(text) if isinstance(text, str) else text
-    return F.filter(
-        F.split(c, r"(?=[^A-Za-z0-9])|(?<=[^A-Za-z0-9])"),
-        lambda t: (t != "") & (t != " "),
-    )
-
-
 def shingles(text: Column | str, n: int = 3) -> Column:
     """Distinct n-gram word shingles ('w1 w2 w3' strings) of a document.
 

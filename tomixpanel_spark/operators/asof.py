@@ -28,7 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from tomixpanel_spark.operators.base import QuerySpec, table
+from tomixpanel_spark.knobs import knob
+from tomixpanel_spark.operators.base import QuerySpec, memo_count, table
 
 # probe/test observable: the strategy the last asof_join call took.
 # Initialized at module scope (the bpe.LAST_TIER precedent) so reading
@@ -105,27 +106,21 @@ def asof_join(
     if not value_cols:
         raise ValueError("right side has no value columns to carry")
     if strategy == "auto":
-        cap = broadcast_cap if broadcast_cap is not None else _bcast_cap()
-        # gate probe is BOUNDED (limit cap+1 proves overflow without a
+        cap = broadcast_cap
+        if cap is None:
+            cap = knob("TOMIX_ASOF_BCAST_ROWS")
+        # gate count is BOUNDED (limit cap+1 proves overflow without a
         # full count) and memoized per (application, right plan, cap) —
         # repeated auto calls on the same dimension table cost one job,
-        # not one per invocation (the _corpus_count precedent)
-        key = (
-            right.sparkSession.sparkContext.applicationId,
-            right.semanticHash(),
-            cap,
+        # not one per invocation. The memo is LRU-bounded, so a
+        # long-lived app re-probes eventually rather than pinning a stale
+        # "fits" verdict for a right table whose files grow.
+        n_right = memo_count(
+            right.sparkSession,
+            ("asof_gate", right.semanticHash(), cap),
+            right.limit(cap + 1),
         )
-        cache_max = _asof_gate_cache_max()
-        hit = _ASOF_GATE_CACHE.get(key) if cache_max > 0 else None
-        if hit is None:
-            hit = right.limit(cap + 1).count() <= cap
-            if cache_max > 0:
-                _ASOF_GATE_CACHE[key] = hit
-                while len(_ASOF_GATE_CACHE) > cache_max:
-                    _ASOF_GATE_CACHE.popitem(last=False)
-        else:
-            _ASOF_GATE_CACHE.move_to_end(key)
-        strategy = "broadcast" if hit else "window"
+        strategy = "broadcast" if n_right <= cap else "window"
     global LAST_STRATEGY
     LAST_STRATEGY = strategy  # probe/test observable (identity.LAST_DISTRIBUTED_ROUNDS precedent)
     if strategy == "cogroup":
@@ -293,36 +288,6 @@ def _asof_cogroup(
     )
 
 
-# LRU-bounded (the _DOCS_PDF_CACHE precedent): an unbounded memo would
-# both grow without limit across many distinct plans AND pin a stale
-# "fits" verdict forever if the right table's files grow within one
-# application — bounding it means a long-lived app re-probes eventually
-# rather than broadcasting an over-cap table into executor OOM. Set
-# TOMIX_ASOF_GATE_CACHE=0 to re-probe every call (mutable-source
-# deployments where the same plan reads growing data).
-from collections import OrderedDict as _OrderedDict
-
-_ASOF_GATE_CACHE: "_OrderedDict[tuple, bool]" = _OrderedDict()
-
-
-def _asof_gate_cache_max() -> int:
-    import os
-
-    return int(os.environ.get("TOMIX_ASOF_GATE_CACHE", "64"))
-
-
-def _bcast_cap() -> int:
-    import os
-
-    return int(os.environ.get("TOMIX_ASOF_BCAST_ROWS", "1000000"))
-
-
-def _merge_chunk_rows() -> int:
-    import os
-
-    return int(os.environ.get("TOMIX_ASOF_MERGE_ROWS", "262144"))
-
-
 def _asof_broadcast(
     left: DataFrame,
     right: DataFrame,
@@ -362,7 +327,7 @@ def _asof_broadcast(
     )
     bc = spark.sparkContext.broadcast(r_pdf)
 
-    chunk_rows = _merge_chunk_rows()
+    chunk_rows = knob("TOMIX_ASOF_MERGE_ROWS")
 
     def run(batches):
         r = bc.value

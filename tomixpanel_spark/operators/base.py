@@ -19,6 +19,8 @@ from typing import Callable, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tomixpanel_spark.knobs import knob
+
 TABLES = (
     "region",
     "nation",
@@ -36,12 +38,6 @@ TABLES = (
 _TABLE_CACHE: "OrderedDict[tuple, DataFrame]" = OrderedDict()
 
 
-def _cache_cap() -> int:
-    import os
-
-    return int(os.environ.get("TOMIX_CACHE_MAX", "48"))
-
-
 def _cache_get(key: tuple) -> Optional[DataFrame]:
     df = _TABLE_CACHE.get(key)
     if df is not None:
@@ -54,7 +50,7 @@ def _cache_put(key: tuple, df: DataFrame) -> None:
     sweeping many sf dirs doesn't accumulate executor storage."""
     _TABLE_CACHE[key] = df
     _TABLE_CACHE.move_to_end(key)
-    while len(_TABLE_CACHE) > _cache_cap():
+    while len(_TABLE_CACHE) > knob("TOMIX_CACHE_MAX"):
         _, old = _TABLE_CACHE.popitem(last=False)
         try:
             old.unpersist()
@@ -110,7 +106,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     import os
 
-    use_cache = bool(os.environ.get("TOMIX_CACHE_TABLES"))
+    use_cache = knob("TOMIX_CACHE_TABLES")
     key = (spark.sparkContext.applicationId, sf_dir, name)
     if use_cache:
         hit = _cache_get(key)
@@ -150,8 +146,8 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # useful range. At cluster scale files are many-row-group and AQE
         # handles both directions, so this knob matters only for
         # single-row-group toy files.
-        parts = int(os.environ.get("TOMIX_CACHE_PARTS", "0"))
-        min_mb = float(os.environ.get("TOMIX_CACHE_PARTS_MIN_MB", "1"))
+        parts = knob("TOMIX_CACHE_PARTS")
+        min_mb = knob("TOMIX_CACHE_PARTS_MIN_MB")
         if parts > 0:
             try:
                 big = os.path.getsize(path) > min_mb * 1e6
@@ -215,8 +211,6 @@ def derived(spark: SparkSession, key: tuple, builder, kind: str = "artifact") ->
     Both are off by default so single-query correctness runs see plain
     lineage; entries share the LRU bound with the table cache.
     """
-    import os
-
     # READ side is unconditional (round-11 verdict #8): an artifact some
     # earlier query already materialized under the flag keeps serving
     # consumers (bm25 reading tfidf's tokenize_tf) even after the flag
@@ -228,7 +222,7 @@ def derived(spark: SparkSession, key: tuple, builder, kind: str = "artifact") ->
     if hit is not None:
         return hit
     flag = "TOMIX_CACHE_TABLES" if kind == "fixture" else "TOMIX_CACHE_DERIVED"
-    if not os.environ.get(flag):
+    if not knob(flag):
         return builder()
     hit = builder().persist()
     _cache_put(k, hit)
@@ -258,6 +252,45 @@ def local_rows_df(spark: SparkSession, rows, schema) -> DataFrame:
     return spark.createDataFrame(sc.parallelize(rows, numSlices=1), schema)
 
 
+def collect_under(df: DataFrame, cap: int) -> "pandas.DataFrame | None":
+    """The bounded gate probe: ``df`` as a driver pandas frame when it
+    has at most ``cap`` rows, else None. One job decides the tier AND,
+    under the gate, IS the collect: ``limit(cap + 1)`` returns at most one
+    row over the gate, so a short result proves every row arrived, and an
+    over-gate frame costs at most ``cap + 1`` rows of transfer.
+    ``cap <= 0`` forces the distributed tier without running a job."""
+    if cap <= 0:
+        return None
+    pdf = df.limit(cap + 1).toPandas()
+    return pdf if len(pdf) <= cap else None
+
+
+# Gate counts (corpus size, vocabulary, eval set, model types, as-of right
+# side) are fixed for an input within one application, so each is counted
+# once. LRU-bounded: a long-lived process over many inputs must not grow
+# the memo without limit, and an evicted key just re-counts.
+_COUNT_MEMO: "OrderedDict[tuple, int]" = OrderedDict()
+_COUNT_MEMO_MAX = 256
+
+
+def memo_count(
+    spark: SparkSession, key: tuple, df: "DataFrame | Callable[[], DataFrame]"
+) -> int:
+    """``df.count()`` memoized per (applicationId, *key). ``key`` must
+    name what is counted (e.g. ``(sf_dir, "n_docs")``), never an object
+    id: ids are not stable across calls. ``df`` may be a zero-argument
+    builder, called only on a miss, when building the frame itself runs
+    a job (an uncached parquet read infers its schema with one)."""
+    k = (spark.sparkContext.applicationId, *key)
+    n = _COUNT_MEMO.pop(k, None)
+    if n is None:
+        n = (df() if callable(df) else df).count()
+    _COUNT_MEMO[k] = n
+    while len(_COUNT_MEMO) > _COUNT_MEMO_MAX:
+        _COUNT_MEMO.popitem(last=False)
+    return n
+
+
 def stage_checkpoint(df: DataFrame, eager: bool = False) -> DataFrame:
     """In-query materialization point for a DataFrame with multiple
     consumers (tf tables, signature clusters, segment projections).
@@ -282,9 +315,7 @@ def stage_checkpoint(df: DataFrame, eager: bool = False) -> DataFrame:
     matching subtrees — a cross-query side effect a single query must not
     have (observed flipping a plan-locked test in round 6).
     """
-    import os
-
-    ck_dir = os.environ.get("TOMIX_CHECKPOINT_DIR")
+    ck_dir = knob("TOMIX_CHECKPOINT_DIR")
     if not ck_dir:
         return df.localCheckpoint(eager=eager)
     sc = df.sparkSession.sparkContext

@@ -31,11 +31,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tomixpanel_spark.functions.text import fingerprint, tokens
+from tomixpanel_spark.knobs import knob
 from tomixpanel_spark.operators.base import (
     QuerySpec,
+    collect_under,
     derived,
     ensure_parallel,
     local_rows_df,
+    memo_count,
     stage_checkpoint,
     table,
 )
@@ -181,7 +184,8 @@ def _jaccard_pairs_from_shingles(
     recall trade), never misscore a generated candidate.
     """
     if df_cap is not None:
-        assert not carry_ntoks, "carry_ntoks is an uncapped-path feature"
+        if carry_ntoks:
+            raise ValueError("carry_ntoks is an uncapped-path feature")
         rows = sa.select(
             "doc_id", F.size("sh_arr").alias("n"), F.explode("sh_arr").alias("sh")
         )
@@ -793,14 +797,10 @@ def simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream never materializes. Weighted lane values still fit: bit*tf <
     2^15 per lane, same packed bound as before.
     """
-    from tomixpanel_spark.operators.textops import (
-        _corpus_count,
-        _tfidf_driver_fold_cap,
-        tokenize_tf,
-    )
+    from tomixpanel_spark.operators.textops import _under_fold_cap, tokenize_tf
 
     docs = ensure_parallel(table(spark, sf_dir, "documents"), "doc_id")
-    if _corpus_count(spark, sf_dir, docs) <= _tfidf_driver_fold_cap():
+    if _under_fold_cap(spark, sf_dir, docs):
         # size-adaptive driver fold (the tfidf/bm25 gate): one Arrow
         # pass + numpy votes, zero exchanges
         return spark.createDataFrame(
@@ -896,10 +896,10 @@ def simhash_pairs(spark: SparkSession, sf_dir: str, band_cap: int | None = None)
     exactly once; intra-cluster (hamming-0) pairs expand directly.
     ``band_cap`` bounds distinct-signature postings, the residual
     hot-bucket guard."""
-    from tomixpanel_spark.operators.textops import _corpus_count, _tfidf_driver_fold_cap
+    from tomixpanel_spark.operators.textops import _under_fold_cap
 
     docs = ensure_parallel(table(spark, sf_dir, "documents"), "doc_id")
-    if band_cap is None and _corpus_count(spark, sf_dir, docs) <= _tfidf_driver_fold_cap():
+    if band_cap is None and _under_fold_cap(spark, sf_dir, docs):
         # full driver fold under the tfidf gate: signatures AND the
         # banded pairing run in numpy, pairs ship back as ONE Arrow
         # local relation. (An earlier fold lost to the JVM join because
@@ -952,23 +952,18 @@ def banded_hamming_pairs(
     band-dropping), the whole pairing folds through
     ``_banded_pairs_fold`` — the signature producer (decode/hash
     pipeline) still runs distributed; only the output-bounded signature
-    rows transfer. The bounded ``limit(cap+1)`` probe proves overflow
-    without shipping the full table."""
+    rows transfer. The bounded probe (``base.collect_under``) proves
+    overflow without shipping the full table."""
     if band_cap is None:
-        from tomixpanel_spark.operators.textops import _tfidf_driver_fold_cap
-
-        cap = _tfidf_driver_fold_cap()
-        if cap > 0:
-            probe = sig.select(
-                F.col(id_col).alias("doc_id"), F.col(sig_col).alias("simhash")
-            ).limit(cap + 1).toPandas()
-            if len(probe) <= cap:
-                import pandas as pd  # noqa: F401 (fold returns pandas)
-
-                pdf = _banded_pairs_fold(probe, n_bands, band_bits, ham_max)
-                return sig.sparkSession.createDataFrame(
-                    pdf, schema="doc_a long, doc_b long, hamming long"
-                )
+        sigs = sig.select(
+            F.col(id_col).alias("doc_id"), F.col(sig_col).alias("simhash")
+        )
+        probe = collect_under(sigs, knob("TOMIX_TFIDF_DRIVER_FOLD_DOCS"))
+        if probe is not None:
+            pdf = _banded_pairs_fold(probe, n_bands, band_bits, ham_max)
+            return sig.sparkSession.createDataFrame(
+                pdf, schema="doc_a long, doc_b long, hamming long"
+            )
     # The cluster table (one row per DISTINCT signature) is the compact
     # dedup artifact everything else reads: materialize it once — four
     # consumers (intra pairs, band postings, two id join-backs) would
@@ -1191,10 +1186,8 @@ def lsh_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     signatures skips the 8 md5 folds per shingle here entirely; with it
     off, the builder runs over the checkpointed shingles — still one
     shingle computation for all three consumers."""
-    import os
-
     sa = stage_checkpoint(_shingle_arrays(spark, sf_dir), eager=False)
-    if os.environ.get("TOMIX_CACHE_DERIVED"):
+    if knob("TOMIX_CACHE_DERIVED"):
         # shared artifact path: build (or reuse) the SAME keyed signature
         # view as minhash_signature, from the FULL lineage — rooting the
         # session-wide artifact in this query's non-replicated
@@ -1392,37 +1385,6 @@ GROUP BY c.component
 
 EVAL_SET_MOD = 97  # synthetic held-out set: every 97th doc
 
-# Broadcast the eval side only while it's small enough to fit executor
-# memory: a benchmark suite is typically thousands of docs, but a 100 TB
-# corpus paired with a huge eval set must fall back to a shuffle join.
-# Gate is in eval DOCS (counted with a cheap single-column scan — counting
-# eval SHINGLE rows would force the whole shingle computation twice).
-EVAL_BROADCAST_MAX_DOCS = 100_000
-
-
-def _eval_broadcast_cap() -> int:
-    import os
-
-    return int(os.environ.get("TOMIX_DECONTAM_BCAST_DOCS", str(EVAL_BROADCAST_MAX_DOCS)))
-
-
-_EVAL_COUNT_CACHE: dict[tuple, int] = {}
-
-
-def _eval_doc_count(spark: SparkSession, sf_dir: str) -> int:
-    """Eval-set cardinality for the broadcast gate — one single-column
-    count job, memoized per (application, sf_dir): the eval set is fixed
-    for a run, so repeated decontam calls shouldn't re-count it."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _EVAL_COUNT_CACHE:
-        _EVAL_COUNT_CACHE[key] = (
-            table(spark, sf_dir, "documents")
-            .filter(F.pmod(F.col("doc_id"), F.lit(EVAL_SET_MOD)) == 0)
-            .count()
-        )
-    return _EVAL_COUNT_CACHE[key]
-
-
 def decontam_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark-decontamination check: which training docs share n-gram
     shingles with the held-out eval set (here: every 97th doc), and how
@@ -1441,8 +1403,18 @@ def decontam_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("sh").alias("e_sh"), F.col("doc_id").alias("eval_doc")
     )
     corpus = rows.filter(~is_eval)
-    n_eval_docs = _eval_doc_count(spark, sf_dir)
-    if n_eval_docs <= _eval_broadcast_cap():
+    # Broadcast the eval side only while it fits executor memory: a
+    # benchmark suite is typically thousands of docs, but a 100 TB corpus
+    # paired with a huge eval set must fall back to a shuffle join. The
+    # gate counts eval DOCS with a cheap single-column scan (counting eval
+    # SHINGLE rows would force the whole shingle computation twice), once
+    # per (application, sf_dir).
+    n_eval_docs = memo_count(
+        spark,
+        (sf_dir, "eval_docs"),
+        lambda: table(spark, sf_dir, "documents").filter(is_eval),
+    )
+    if n_eval_docs <= knob("TOMIX_DECONTAM_BCAST_DOCS"):
         eval_side = F.broadcast(eval_sh)
     else:
         # Above the gate we KNOW the eval side is big even when Catalyst's
@@ -1619,10 +1591,10 @@ def substring_dup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     back in the same keyed space. Production suffix-array dedup replaces
     the window explode with an index build — the decision signal is the
     same."""
-    from tomixpanel_spark.operators.textops import _corpus_count, _tfidf_driver_fold_cap
+    from tomixpanel_spark.operators.textops import _under_fold_cap
 
     docs = ensure_parallel(table(spark, sf_dir, "documents"), "doc_id")
-    if _corpus_count(spark, sf_dir, docs) <= _tfidf_driver_fold_cap():
+    if _under_fold_cap(spark, sf_dir, docs):
         # size-adaptive driver fold (the tfidf/bm25/simhash gate): the
         # distributed plan below is ~5 stages of scheduler floor at small
         # window counts; paths-agree test pins identity
@@ -1759,10 +1731,10 @@ def substring_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id, position), state bounded per doc. Size-adaptive: driver
     fold under the tfidf gate (vectorized lexsort + reduceat), same
     shape distributed."""
-    from tomixpanel_spark.operators.textops import _corpus_count, _tfidf_driver_fold_cap
+    from tomixpanel_spark.operators.textops import _under_fold_cap
 
     docs = ensure_parallel(table(spark, sf_dir, "documents"), "doc_id")
-    if _corpus_count(spark, sf_dir, docs) <= _tfidf_driver_fold_cap():
+    if _under_fold_cap(spark, sf_dir, docs):
         return spark.createDataFrame(
             _substring_spans_fold(docs),
             schema="doc_id long, span_start long, span_end long, span_tokens long",
@@ -1889,10 +1861,10 @@ def substring_dedup_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc span masking runs as one higher-order filter over the token
     array — no token-level explode or shuffle on the cleaning side.
     Size-adaptive via the family's driver-fold gate."""
-    from tomixpanel_spark.operators.textops import _corpus_count, _tfidf_driver_fold_cap
+    from tomixpanel_spark.operators.textops import _under_fold_cap
 
     docs = ensure_parallel(table(spark, sf_dir, "documents"), "doc_id")
-    if _corpus_count(spark, sf_dir, docs) <= _tfidf_driver_fold_cap():
+    if _under_fold_cap(spark, sf_dir, docs):
         return spark.createDataFrame(
             _substring_clean_fold(docs),
             schema="doc_id long, kept_tokens long, removed_tokens long, cleaned_fp string",

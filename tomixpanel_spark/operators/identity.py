@@ -20,14 +20,14 @@ feasible at test scale, while the Spark loop is the 100 TB path.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from tomixpanel_spark.knobs import knob
 from tomixpanel_spark.operators.base import (
     QuerySpec,
+    collect_under,
     local_rows_df,
     stage_checkpoint,
     table,
@@ -38,22 +38,6 @@ MAX_ITERATIONS = 20
 # rounds the DISTRIBUTED path took on the last connected_components call;
 # None when the driver union-find path ran instead
 LAST_DISTRIBUTED_ROUNDS: "int | None" = None
-# Below this many DISTINCT edges the component computation runs as driver-
-# side union-find on the collected edge list — the same size-adaptive
-# strategy as a broadcast join (the edge set after dedup is the identity
-# graph, tiny relative to the event volume that produced it). Above it,
-# the distributed label-propagation loop runs. ~2M edges of short string
-# ids is low hundreds of MB on the driver — comfortably collectable.
-LOCAL_EDGE_THRESHOLD = 2_000_000
-
-
-def _local_edge_threshold() -> int:
-    # env read at CALL time (not import) so a bench/ops process can flip
-    # the strategy per pass — TOMIX_CC_LOCAL_MAX=0 forces the distributed
-    # label-propagation loop; unset uses the module default (tests
-    # monkeypatch the attribute)
-    v = os.environ.get("TOMIX_CC_LOCAL_MAX")
-    return int(v) if v is not None else LOCAL_EDGE_THRESHOLD
 
 
 def _local_components(pdf) -> list[tuple]:
@@ -189,19 +173,17 @@ def _cc_impl(
         )
         .distinct()
     )
-    # ONE bounded probe job decides the tier AND (under the gate) IS the
-    # collect: limit(thr+1) can return at most one row over the gate, so
-    # len(probe) <= thr proves the whole distinct edge set was collected.
-    # This replaces the r14 shape's three serial actions (eager
-    # localCheckpoint + count + toPandas — each a scheduling floor on the
-    # small graphs the gate exists for; guide §1.2 step 1). The lazy
-    # checkpoint still truncates lineage: partitions the probe computes
-    # persist as a side effect, and the distributed branch below forces
-    # full materialization before its iterative consumers re-read.
-    thr = _local_edge_threshold()
+    # ONE bounded probe job (base.collect_under) decides the tier AND
+    # (under the gate) IS the collect. This replaces the r14 shape's three
+    # serial actions (eager localCheckpoint + count + toPandas — each a
+    # scheduling floor on the small graphs the gate exists for; guide
+    # §1.2 step 1). The lazy checkpoint still truncates lineage:
+    # partitions the probe computes persist as a side effect, and the
+    # distributed branch below forces full materialization before its
+    # iterative consumers re-read.
     ded = stage_checkpoint(ded, eager=False)
-    probe = ded.limit(thr + 1).toPandas()
-    if len(probe) <= thr:
+    probe = collect_under(ded, knob("TOMIX_CC_LOCAL_MAX"))
+    if probe is not None:
         LAST_DISTRIBUTED_ROUNDS = None  # the local path ran
         rows = _local_components(probe)
         schema = StructType(

@@ -26,7 +26,6 @@ computed in pandas batches, hash-identical to the DuckDB SQL mirror.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 from typing import Callable, Optional
 
@@ -42,6 +41,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from tomixpanel_spark.knobs import knob
 from tomixpanel_spark.operators.base import QuerySpec, table
 
 # Canonical multimodal record: payload + typed metadata (media_type mirrors
@@ -969,7 +969,7 @@ def _decode_jpeg_gray_impl(payload: bytes):
         raise ValueError(
             "JPEG SOF dimensions exceed what the entropy data could code"
         )
-    max_px = int(os.environ.get("TOMIX_IMG_MAX_PIXELS", str(1 << 26)))
+    max_px = knob("TOMIX_IMG_MAX_PIXELS")
     if ph * pw > max_px:
         raise ValueError(
             f"JPEG dimensions {h}x{w} exceed TOMIX_IMG_MAX_PIXELS={max_px}"
@@ -1060,7 +1060,7 @@ def _decode_jpeg_noninterleaved(
     cid0, h0, v0, tq0 = comps[0]
     bw = -(-(-(-w * h0 // hmax)) // 8)
     bh = -(-(-(-h * v0 // vmax)) // 8)
-    max_px = int(os.environ.get("TOMIX_IMG_MAX_PIXELS", str(1 << 26)))
+    max_px = knob("TOMIX_IMG_MAX_PIXELS")
     if bh * 8 * bw * 8 > max_px:
         raise ValueError(
             f"JPEG dimensions {h}x{w} exceed TOMIX_IMG_MAX_PIXELS={max_px}"
@@ -1199,7 +1199,7 @@ def _decode_jpeg_progressive(
         bh_real = -(-(-(-h * vi // vmax)) // 8)
         geo.append((cid, hi, vi, tq, bw_pad, bh_pad, bw_real, bh_real))
         total_blocks += bw_pad * bh_pad
-    max_px = int(os.environ.get("TOMIX_IMG_MAX_PIXELS", str(1 << 26)))
+    max_px = knob("TOMIX_IMG_MAX_PIXELS")
     # three bounds, all required, and all denominated in what they
     # actually protect (round-12 verdict #7 — the old geometry bound
     # counted CELLS, reading 4x looser than the bytes it admitted):
@@ -1229,7 +1229,7 @@ def _decode_jpeg_progressive(
         raise ValueError(
             f"JPEG dimensions {h}x{w} exceed TOMIX_IMG_MAX_PIXELS={max_px}"
         )
-    floor_mb = int(os.environ.get("TOMIX_JPEG_PROG_ALLOC_FLOOR_MB", "16"))
+    floor_mb = knob("TOMIX_JPEG_PROG_ALLOC_FLOOR_MB")
     if buf_bytes > max(floor_mb << 20, 1024 * len(payload)):
         need_mb = -(-buf_bytes // (1 << 20))  # ceil MB that would admit it
         raise ValueError(

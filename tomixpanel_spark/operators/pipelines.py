@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tomixpanel_spark.functions.text import fingerprint, lang_guess, tokens
+from tomixpanel_spark.knobs import knob
 from tomixpanel_spark.operators.base import (
     QuerySpec,
     ensure_parallel,
@@ -323,7 +324,12 @@ def semdedup_clusters(
     near-dup pairs — its plan must exchange on the cluster id only
     (tests/test_pipelines.py asserts hashpartitioning(cell) and no
     cartesian), because connected_components' driver-local tier would
-    otherwise hide the pairing plan from the final query's explain."""
+    otherwise hide the pairing plan from the final query's explain.
+
+    ``assigned`` is not materialized (pair generation is its only
+    consumer in ``semdedup_prune``), so a caller that reads BOTH frames
+    recomputes the Arrow assignment pass, and the corpus scan under it,
+    once per frame."""
     import numpy as np
 
     from tomixpanel_spark.operators.similarity import (
@@ -333,7 +339,6 @@ def semdedup_clusters(
         _finite_vecs,
         _mat,
         _quant,
-        _score_cells_cap,
     )
 
     emb = ensure_parallel(table(spark, sf_dir, "embeddings"), "vec_id")
@@ -379,7 +384,7 @@ def semdedup_clusters(
         schema="vec_id long, cell int, cdot long, embedding array<float>",
     )
 
-    cells_cap = _score_cells_cap()
+    cells_cap = knob("TOMIX_SCORE_CELLS_CAP")
     empty = pd.DataFrame(
         {"vec_a": [], "vec_b": [], "sim_e6": [], "cdot_a": [], "cdot_b": []}
     )

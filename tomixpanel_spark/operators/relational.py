@@ -21,13 +21,6 @@ from pyspark.sql import functions as F
 
 from tomixpanel_spark.operators.base import QuerySpec, table
 
-# Exact deterministic money sum: double -> decimal (exact add) -> double.
-_DEC = "decimal(18,2)"
-
-
-def _dsum(col):  # deterministic sum of a money/quantity double column
-    return F.sum(F.col(col).cast(_DEC)).cast("double")
-
 
 def project_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T1 rename: canonical-name projection (reference connectors/csvETL.js:101-118

@@ -41,8 +41,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from tomixpanel_spark.knobs import knob
 from tomixpanel_spark.operators.base import (
     QuerySpec,
+    collect_under,
     ensure_parallel,
     fresh_attrs,
     local_rows_df,
@@ -54,20 +56,6 @@ N_QUERIES = 10
 TOP_K = 5
 NEARDUP_E6 = 400_000  # cosine >= 0.40 (synthetic corpus max ~0.51)
 NEARDUP_BLOCKS = 8  # all-pairs block count; at 100 TB size so N/B fits a task
-# Per-matmul score-matrix cell budget (~32 MB of int64 per chunk). The
-# REAL task-memory bound of every pair kernel: a block pair's naive
-# (nL x nR) score matrix is O((N/B)^2) cells regardless of n_blocks —
-# the round-11 probe sized it at 14 GB/task at 1M x 110k decontam scale
-# before chunking. Kernels now score the left side in row chunks of
-# cap // nR, so task memory is O(block_rows * d + cap) and only hits
-# accumulate. Env-tunable for executor-memory sizing.
-SCORE_CELLS_CAP = 4_000_000
-
-
-def _score_cells_cap() -> int:
-    import os
-
-    return int(os.environ.get("TOMIX_SCORE_CELLS_CAP", str(SCORE_CELLS_CAP)))
 
 _SQL_SIM = (
     "CAST(round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), "
@@ -163,7 +151,7 @@ def _scored_pairs(
     silently suppress a real cross-set pair."""
     import numpy as np
 
-    cells_cap = _score_cells_cap()
+    cells_cap = knob("TOMIX_SCORE_CELLS_CAP")
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         if not len(q_ids):
@@ -299,7 +287,7 @@ def embedding_neardup_pairs(
     The corpus hash-splits into ``n_blocks`` blocks on the id; every
     unordered block pair (i <= j) cogroups into one task that scores the
     pair with chunked matmuls. Each row shuffles ~n_blocks times and task
-    memory is O(|corpus|/n_blocks * d + SCORE_CELLS_CAP): the input rows
+    memory is O(|corpus|/n_blocks * d + TOMIX_SCORE_CELLS_CAP): the input rows
     per block plus ONE bounded score chunk — the naive single matmul's
     (N/B)^2 score matrix is the term that actually blows up at scale
     (14 GB/task at the round-11 probe's 100k-vector corpus), so the left
@@ -337,7 +325,7 @@ def embedding_neardup_pairs(
 
     empty = pd.DataFrame({"vec_a": [], "vec_b": [], "sim_e6": []})
 
-    cells_cap = _score_cells_cap()
+    cells_cap = knob("TOMIX_SCORE_CELLS_CAP")
 
     def block_pairs(key, lg: pd.DataFrame, rg: pd.DataFrame) -> pd.DataFrame:
         pi, pj = int(key[0]), int(key[1])
@@ -384,15 +372,6 @@ def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return embedding_neardup_pairs(table(spark, sf_dir, "embeddings"))
 
 
-EMB_BCAST_MAX_VECS = 100_000  # ~25 MB closure at 64 float32 dims
-
-
-def _emb_bcast_cap() -> int:
-    import os
-
-    return int(os.environ.get("TOMIX_EMB_BCAST_VECS", str(EMB_BCAST_MAX_VECS)))
-
-
 def _cross_blocked_pairs(
     left_df: DataFrame,
     right_df: DataFrame,
@@ -404,7 +383,7 @@ def _cross_blocked_pairs(
     """Blocked cogroup over TWO DISTINCT sides: every (left, right) pair
     lands in exactly one of n_blocks^2 tasks (left row replicated across
     partner right-blocks and vice versa), scored with CHUNKED matmuls.
-    Task memory is O((|L|+|R|)/n_blocks * d + SCORE_CELLS_CAP) — the
+    Task memory is O((|L|+|R|)/n_blocks * d + TOMIX_SCORE_CELLS_CAP) — the
     two-sided twin of ``embedding_neardup_pairs``' triangle blocking,
     with the same bounded-score-chunk rule (the naive per-task score
     matrix is O(|L||R|/B^2) cells and was the real memory term)."""
@@ -428,7 +407,7 @@ def _cross_blocked_pairs(
     right = blocked(right_df, "pj", "pi")
     empty = pd.DataFrame({"train_id": [], "eval_id": [], "sim_e6": []})
 
-    cells_cap = _score_cells_cap()
+    cells_cap = knob("TOMIX_SCORE_CELLS_CAP")
 
     def block_pairs(key, lg: pd.DataFrame, rg: pd.DataFrame) -> pd.DataFrame:
         if not len(lg) or not len(rg):
@@ -492,15 +471,14 @@ def embedding_decontam_pairs(
     train = _finite_vecs(train, vec_col)
     held_out = _finite_vecs(held_out, vec_col)
     # ONE bounded probe job decides the tier AND (under the gate) IS the
-    # collect (the CC-probe idiom): limit(cap+1) can return at most one
-    # row over the gate, so a short result proves the whole held-out set
-    # is already on the driver — the old shape paid a separate count job
-    # before an identical toPandas. Over the gate the wasted transfer is
-    # bounded by the cap (~25 MB at the default) and the blocked cogroup
-    # runs unchanged.
-    cap = _emb_bcast_cap()
-    pdf = held_out.select(id_col, vec_col).limit(cap + 1).toPandas()
-    if len(pdf) > cap:
+    # collect (base.collect_under) — the old shape paid a separate count
+    # job before an identical toPandas. Over the gate the wasted transfer
+    # is bounded by the cap (~25 MB at the default 100k vectors of 64
+    # float32 dims) and the blocked cogroup runs unchanged.
+    pdf = collect_under(
+        held_out.select(id_col, vec_col), knob("TOMIX_EMB_BCAST_VECS")
+    )
+    if pdf is None:
         return _cross_blocked_pairs(
             train, held_out, threshold_e6, id_col=id_col, vec_col=vec_col
         )
@@ -1327,7 +1305,7 @@ def embedding_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     Jaccard) and ``lsh_keep_list`` (MinHash banding).
 
     Scale shape: pairs come from the chunked blocked kernel (task memory
-    O(block_rows*d + SCORE_CELLS_CAP)); CC flips to distributed label
+    O(block_rows*d + TOMIX_SCORE_CELLS_CAP)); CC flips to distributed label
     propagation past TOMIX_CC_LOCAL_MAX (probe-verified at 2.5M edges);
     the final anti-join keys on vec_id only."""
     from tomixpanel_spark.operators.identity import connected_components_with_rows

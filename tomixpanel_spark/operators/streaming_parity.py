@@ -29,6 +29,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tomixpanel_spark.knobs import knob
 from tomixpanel_spark.operators.base import QuerySpec, table
 
 # TWO data micro-batches per parity stream (+ availableNow's one no-data
@@ -62,7 +63,7 @@ def _scratch_dir(prefix: str) -> str:
     driver rounds."""
     import atexit
 
-    root = os.environ.get("TOMIX_STREAM_SCRATCH")
+    root = knob("TOMIX_STREAM_SCRATCH")
     if root is None and os.path.isdir("/dev/shm"):
         try:
             st = os.statvfs("/dev/shm")
@@ -144,7 +145,7 @@ def _staged_landing(spark: SparkSession, sf_dir: str) -> str:
     re-runs fully on every call either way."""
     key = (spark.sparkContext.applicationId, sf_dir)
     cached = _LANDING_CACHE.get(key)
-    if cached and os.environ.get("TOMIX_CACHE_TABLES") and os.path.isdir(cached):
+    if cached and knob("TOMIX_CACHE_TABLES") and os.path.isdir(cached):
         return cached
     if cached:
         # uncached mode re-stages every call: reclaim the previous
@@ -241,7 +242,7 @@ def _staged_amp_landing(spark: SparkSession, sf_dir: str) -> str:
     TOMIX_CACHE_TABLES (same policy as _staged_landing)."""
     key = (spark.sparkContext.applicationId, sf_dir, "amp")
     cached = _AMP_LANDING_CACHE.get(key)
-    if cached and os.environ.get("TOMIX_CACHE_TABLES") and os.path.isdir(cached):
+    if cached and knob("TOMIX_CACHE_TABLES") and os.path.isdir(cached):
         return cached
     if cached:
         shutil.rmtree(os.path.dirname(cached), ignore_errors=True)
@@ -327,7 +328,7 @@ def _staged_day_landing(
 
     key = (spark.sparkContext.applicationId, sf_dir, tag)
     cached = _DAY_LANDING_CACHE.get(key)
-    if cached and os.environ.get("TOMIX_CACHE_TABLES") and os.path.isdir(cached):
+    if cached and knob("TOMIX_CACHE_TABLES") and os.path.isdir(cached):
         return cached
     if cached:
         shutil.rmtree(os.path.dirname(cached), ignore_errors=True)
@@ -545,7 +546,7 @@ def _staged_doc_landing(spark: SparkSession, sf_dir: str) -> str:
     under test)."""
     key = (spark.sparkContext.applicationId, sf_dir, "docs")
     cached = _DOC_LANDING_CACHE.get(key)
-    if cached and os.environ.get("TOMIX_CACHE_TABLES") and os.path.isdir(cached):
+    if cached and knob("TOMIX_CACHE_TABLES") and os.path.isdir(cached):
         return cached
     if cached:
         shutil.rmtree(os.path.dirname(cached), ignore_errors=True)
@@ -744,17 +745,13 @@ def dedup_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     long-keyed hash join; the oracle recomputes the decision from raw
     text, so the hash check proves index-serving correctness while the
     ratio compares probe vs recompute."""
-    from tomixpanel_spark.operators.textops import (
-        _corpus_count,
-        _tfidf_driver_fold_cap,
-        docs_pdf,
-    )
+    from tomixpanel_spark.operators.textops import _under_fold_cap, docs_pdf
     from tomixpanel_spark.streaming.dedup_index import DedupIndex
 
     store = _built_dedup_index(spark, sf_dir)
     docs = table(spark, sf_dir, "documents")
     probe = docs.filter(F.pmod("doc_id", F.lit(2)) == 1).select("doc_id", "text")
-    if _corpus_count(spark, sf_dir, docs) <= _tfidf_driver_fold_cap():
+    if _under_fold_cap(spark, sf_dir, docs):
         # serving-latency path: driver probe (same hash spec, pyarrow
         # bucket reads, one merge) — the distributed probe's three job
         # floors dominate at interactive batch sizes; paths-agree test

@@ -29,10 +29,12 @@ from tomixpanel_spark.functions.text import (
     quality_features,
     tokens,
 )
+from tomixpanel_spark.knobs import knob
 from tomixpanel_spark.operators.base import (
     QuerySpec,
     ensure_parallel,
     local_rows_df,
+    memo_count,
     stage_checkpoint,
     table,
 )
@@ -221,10 +223,8 @@ def mixture_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = d.groupBy("bucket").agg(F.count(F.lit(1)).alias("cnt"))
     mn = counts.agg(F.min("cnt").alias("mn"))
     build = counts.crossJoin(mn)
-    n_buckets = _vocab_count(
-        spark, (spark.sparkContext.applicationId, sf_dir, "mix_buckets"), counts
-    )
-    if n_buckets <= _mixture_bucket_cap():
+    n_buckets = memo_count(spark, (sf_dir, "mix_buckets"), counts)
+    if n_buckets <= knob("TOMIX_MIXTURE_BCAST_BUCKETS"):
         build = F.broadcast(build)
     else:
         build = build.hint("shuffle_hash")
@@ -232,20 +232,6 @@ def mixture_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.join(build, "bucket")
         .filter(F.col("h") * F.col("cnt") < F.col("mn") * 10000)
         .select("doc_id", "bucket")
-    )
-
-
-# A bucketing function that explodes past this many distinct buckets is
-# degenerate (buckets are languages/sources — intrinsically small), but
-# the gate makes the broadcast-bound RUNTIME-checked like decontam's.
-MIXTURE_BROADCAST_MAX_BUCKETS = 100_000
-
-
-def _mixture_bucket_cap() -> int:
-    import os
-
-    return int(
-        os.environ.get("TOMIX_MIXTURE_BCAST_BUCKETS", str(MIXTURE_BROADCAST_MAX_BUCKETS))
     )
 
 
@@ -1120,16 +1106,14 @@ def docs_pdf(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"):
     analog of the engine buffer pool, so it caches under the SAME flag
     as the table cache (``TOMIX_CACHE_TABLES``): it holds raw input
     pages, never a query's work product. Gate-bounded by every caller
-    (``_tfidf_driver_fold_cap``)."""
-    import os
-
+    (``_under_fold_cap``)."""
     key = (
         docs.sparkSession.sparkContext.applicationId,
         docs.semanticHash(),
         id_col,
         text_col,
     )
-    if os.environ.get("TOMIX_CACHE_TABLES"):
+    if knob("TOMIX_CACHE_TABLES"):
         hit = _DOCS_PDF_CACHE.get(key)
         if hit is not None:
             _DOCS_PDF_CACHE.move_to_end(key)
@@ -1137,7 +1121,7 @@ def docs_pdf(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"):
     pdf = docs.select(
         F.col(id_col).alias(id_col), F.col(text_col).alias(text_col)
     ).toPandas()
-    if os.environ.get("TOMIX_CACHE_TABLES"):
+    if knob("TOMIX_CACHE_TABLES"):
         _DOCS_PDF_CACHE[key] = pdf
         while len(_DOCS_PDF_CACHE) > _DOCS_PDF_CACHE_MAX:
             _DOCS_PDF_CACHE.popitem(last=False)
@@ -1153,67 +1137,25 @@ def tokenize_tf_pdf(docs: DataFrame, id_col: str = "doc_id", text_col: str = "te
     mapInPandas pass and shipped the tf table back; collecting the raw
     text instead removes a scheduler round per query (the raw documents
     are SMALLER than their tf table at typical English token/byte
-    ratios). Callers gate on ``_tfidf_driver_fold_cap`` before calling.
+    ratios). Callers gate on ``_under_fold_cap`` before calling.
     Returns pandas (doc_id, token, tf)."""
     pdf = docs_pdf(docs, id_col, text_col)
     return _pa_tokenize_tf(pdf[id_col], pdf[text_col]).to_pandas()
 
 
-# Vocabulary gate for the df broadcast (same pattern as decontam's
-# held-out gate, round-7 advice): broadcast only while the distinct-token
-# side fits executor memory; above the cap, fall back to a shuffle join.
-TFIDF_BROADCAST_MAX_VOCAB = 2_000_000
-
-
-def _tfidf_vocab_cap() -> int:
-    import os
-
-    return int(os.environ.get("TOMIX_TFIDF_BCAST_VOCAB", str(TFIDF_BROADCAST_MAX_VOCAB)))
-
-
-_VOCAB_COUNT_CACHE: dict[tuple, int] = {}
-
-
-def _vocab_count(spark: SparkSession, key: tuple, df_counts: DataFrame) -> int:
-    """Distinct-token cardinality for the broadcast gate — one count job
-    over the (already checkpointed) tf table, memoized per (application,
-    sf_dir): the vocabulary is fixed for a corpus, so repeated keyword
-    extractions don't re-count it."""
-    if key not in _VOCAB_COUNT_CACHE:
-        _VOCAB_COUNT_CACHE[key] = df_counts.count()
-    return _VOCAB_COUNT_CACHE[key]
-
-
-# Size-adaptive execution gate (the identity.py CC pattern — driver
-# union-find under an edge cap, distributed label propagation above —
-# applied to corpus stats): corpora under this many documents resolve in
-# ONE narrow Arrow pass that emits the sparse per-doc tf table, folded to
-# df + scores + top-3 on the driver; larger corpora take the distributed
-# tf + gated broadcast-join plan. The gate bounds the driver collect: the
-# tf table is docs x distinct-tokens-per-doc rows (~25k docs with a
-# typical ~250-token distinct profile is ~6M small rows, a few hundred
-# MB of pandas — the same order as the CC edge cap).
-TFIDF_DRIVER_FOLD_MAX_DOCS = 25_000
-
-
-def _tfidf_driver_fold_cap() -> int:
-    import os
-
-    return int(
-        os.environ.get("TOMIX_TFIDF_DRIVER_FOLD_DOCS", str(TFIDF_DRIVER_FOLD_MAX_DOCS))
-    )
-
-
-_CORPUS_COUNT_CACHE: dict[tuple, int] = {}
-
-
-def _corpus_count(spark: SparkSession, sf_dir: str, docs: DataFrame) -> int:
-    """documents cardinality for the size gate — memoized per
-    (application, sf_dir), same precedent as decontam's eval-count."""
-    key = (spark.sparkContext.applicationId, sf_dir, "n_docs")
-    if key not in _CORPUS_COUNT_CACHE:
-        _CORPUS_COUNT_CACHE[key] = docs.count()
-    return _CORPUS_COUNT_CACHE[key]
+def _under_fold_cap(spark: SparkSession, sf_dir: str, docs: DataFrame) -> bool:
+    """Size-adaptive execution gate of the text family (the identity.py
+    CC pattern — driver union-find under an edge cap, distributed label
+    propagation above — applied to corpus stats): corpora at or under
+    ``TOMIX_TFIDF_DRIVER_FOLD_DOCS`` documents resolve in ONE narrow Arrow
+    pass folded on the driver; larger corpora take the distributed plan.
+    The gate bounds the driver collect: the tf table is docs x
+    distinct-tokens-per-doc rows (~25k docs with a typical ~250-token
+    distinct profile is ~6M small rows, a few hundred MB of pandas — the
+    same order as the CC edge cap). The document count is memoized per
+    (application, sf_dir)."""
+    n_docs = memo_count(spark, (sf_dir, "n_docs"), docs)
+    return n_docs <= knob("TOMIX_TFIDF_DRIVER_FOLD_DOCS")
 
 
 def _tfidf_driver_fold(docs: DataFrame, n_docs: int) -> DataFrame:
@@ -1222,7 +1164,7 @@ def _tfidf_driver_fold(docs: DataFrame, n_docs: int) -> DataFrame:
     second scan. The pass is the same fused tokenize+count as the
     distributed plan (``tokenize_tf``'s batch body), emitting the sparse
     (doc_id, token, tf) table — the ONLY corpus-sized transfer; the
-    collect is gate-bounded (``TFIDF_DRIVER_FOLD_MAX_DOCS``). On the
+    collect is gate-bounded (``TOMIX_TFIDF_DRIVER_FOLD_DOCS``). On the
     driver, df is one pandas value_counts over the unique-per-(doc,
     token) rows, scores are exact vectorized int64 arithmetic
     (tf * 1e6 * N // df — all positive, pandas ``//`` floors like
@@ -1318,8 +1260,8 @@ def tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both paths produce identical rows (asserted by
     tests/test_plans.py::test_tfidf_paths_agree)."""
     docs = ensure_parallel(table(spark, sf_dir, "documents"), "doc_id")
-    n_docs = _corpus_count(spark, sf_dir, docs)
-    if n_docs <= _tfidf_driver_fold_cap():
+    n_docs = memo_count(spark, (sf_dir, "n_docs"), docs)
+    if _under_fold_cap(spark, sf_dir, docs):
         return _tfidf_driver_fold(docs, n_docs)
     tf = _tf_view(docs)
     df_counts = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
@@ -1331,10 +1273,11 @@ def tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     build = df_counts.select(
         "token", "df", F.lit(n_docs).cast("bigint").alias("n_docs")
     )
-    vocab = _vocab_count(
-        spark, (spark.sparkContext.applicationId, sf_dir, "vocab"), df_counts
-    )
-    if vocab <= _tfidf_vocab_cap():
+    # vocabulary gate (decontam's held-out pattern, round-7 advice):
+    # broadcast only while the distinct-token side fits executor memory
+    if memo_count(spark, (sf_dir, "vocab"), df_counts) <= knob(
+        "TOMIX_TFIDF_BCAST_VOCAB"
+    ):
         build = F.broadcast(build)
     else:
         # vocabulary too big for executor memory: shuffle join, with
@@ -1510,7 +1453,7 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     only over-count (collisions add), and both engines hash identically,
     so over-counts match exactly too."""
     docs = ensure_parallel(table(spark, sf_dir, "documents"), "doc_id")
-    if _corpus_count(spark, sf_dir, docs) <= _tfidf_driver_fold_cap():
+    if _under_fold_cap(spark, sf_dir, docs):
         # size-adaptive driver fold (the tfidf/bm25/simhash/substring
         # gate): tokenize driver-side, build the DEPTHxWIDTH cells with
         # one scatter-add per row, estimate = min over rows — identical
@@ -1648,8 +1591,8 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = ensure_parallel(table(spark, sf_dir, "documents"), "doc_id")
-    n_docs = _corpus_count(spark, sf_dir, docs)
-    if n_docs <= _tfidf_driver_fold_cap():
+    n_docs = memo_count(spark, (sf_dir, "n_docs"), docs)
+    if _under_fold_cap(spark, sf_dir, docs):
         return _bm25_driver_fold(docs, n_docs)
     tf = _tf_view(docs)
     tfd = tf  # dl is fused into the tokenize pass (no window exchange)
@@ -1726,22 +1669,6 @@ SELECT q_id, doc_id, rank, score_e6 FROM (
 
 
 # -- bigram LM scoring (CCNet-style perplexity filter, integer-exact) --------
-
-# Broadcast the bigram model while its cardinality (distinct bigram types,
-# NOT occurrences) stays under this cap; above it the scoring join falls
-# back to a shuffle join on (prev, cur). Counted once per (application,
-# sf_dir) and memoized — the tfidf vocab-gate precedent.
-LM_BROADCAST_MAX_BIGRAMS = 2_000_000
-
-
-def _lm_bcast_cap() -> int:
-    import os
-
-    return int(os.environ.get("TOMIX_LM_BCAST_BIGRAMS", str(LM_BROADCAST_MAX_BIGRAMS)))
-
-
-_LM_MODEL_COUNT_CACHE: dict[tuple, int] = {}
-
 
 def _lm_driver_fold(spark: SparkSession, docs: DataFrame) -> DataFrame:
     """Small-corpus bigram-LM scoring: one Arrow transfer of the raw
@@ -1850,7 +1777,7 @@ def bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tomixpanel_spark.functions.text import adjacent_pairs
 
     docs = ensure_parallel(table(spark, sf_dir, "documents"), "doc_id")
-    if _corpus_count(spark, sf_dir, docs) <= _tfidf_driver_fold_cap():
+    if _under_fold_cap(spark, sf_dir, docs):
         return _lm_driver_fold(spark, docs)
     toks = docs.select("doc_id", tokens("text").alias("words"))
     pairs = adjacent_pairs(F.col("words"), "prev", "cur")
@@ -1866,10 +1793,11 @@ def bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab = docs.select(F.explode(tokens("text")).alias("t")).agg(
         F.count_distinct("t").alias("v")
     )
-    key = (spark.sparkContext.applicationId, sf_dir, "lm_bigram_types")
-    if key not in _LM_MODEL_COUNT_CACHE:
-        _LM_MODEL_COUNT_CACHE[key] = model.count()
-    if _LM_MODEL_COUNT_CACHE[key] <= _lm_bcast_cap():
+    # broadcast while the model's cardinality (distinct bigram types, NOT
+    # occurrences) stays under the cap — counted once per (application,
+    # sf_dir), the tfidf vocab-gate precedent
+    n_types = memo_count(spark, (sf_dir, "lm_bigram_types"), model)
+    if n_types <= knob("TOMIX_LM_BCAST_BIGRAMS"):
         model, ctx = F.broadcast(model), F.broadcast(ctx)
     scored = (
         big.join(model, ["prev", "cur"])

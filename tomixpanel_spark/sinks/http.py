@@ -39,7 +39,7 @@ from tomixpanel_spark.sinks.batching import (
 )
 
 # transport(url, body, headers, method) -> (status_code, response_text)
-Transport = Callable[..., tuple[int, str]]
+Transport = Callable[[str, bytes, dict, str], tuple[int, str]]
 
 RECEIPT_SCHEMA = (
     "partition_id int, batch_index int, n_records int, n_bytes int, "
@@ -162,8 +162,6 @@ class HttpSink:
                     attempts = attempt + 1
                     try:
                         status, text = transport(url, body, headers, cfg.method)
-                    except TypeError:
-                        status, text = transport(url, body, headers)  # legacy 3-arg
                     except Exception as e:  # network-level failure
                         status, text = -1, repr(e)
                     if status == 200:

@@ -52,12 +52,3 @@ class GcsGaSource:
         """Typed GA session read; JSON-Schema gate (V1) becomes the typed
         StructType + corrupt-record column."""
         return read_json_auto(spark, paths or self.staging_dir, GA_SESSION_SCHEMA)
-
-
-def read_gcs_direct(spark: SparkSession, uri: str) -> DataFrame:
-    """Cluster path: direct gs:// glob read through the GCS connector."""
-    return (
-        spark.read.schema(GA_SESSION_SCHEMA)
-        .option("mode", "PERMISSIVE")
-        .json(uri)
-    )

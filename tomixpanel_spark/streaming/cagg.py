@@ -57,6 +57,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from tomixpanel_spark.knobs import knob
+from tomixpanel_spark.operators.base import collect_under
 from tomixpanel_spark.streaming.genstore import (
     cas_check,
     mint_store_id,
@@ -296,23 +298,19 @@ class ContinuousAggregate:
             if batch_id <= man["batch_id"]:
                 return  # replayed batch: already committed in the manifest
             spark = batch_df.sparkSession
-            cap = int(os.environ.get("TOMIX_CAGG_DRIVER_MERGE_CAP", "65536"))
             # persist ONCE across the gate probe and whichever merge path
             # runs — without the pin an over-cap batch would re-aggregate
             # the raw stream for the distributed merge after the probe
             # already computed the full aggregate
             partials = self._batch_partials(batch_df).persist()
             try:
-                pdf = None
                 # driver writer emits a string key column; exotic key_type
                 # stores take the distributed path rather than guessing an
                 # arrow type
-                if cap > 0 and self.key_type == "string":
-                    # LIMIT cap+1 bounds the driver transfer: exactly-cap-
-                    # or-less means we hold ALL cells; cap+1 rows proves
-                    # overflow without shipping the full aggregate
-                    pdf = partials.limit(cap + 1).toPandas()
-                if pdf is not None and len(pdf) <= cap:
+                pdf = None
+                if self.key_type == "string":
+                    pdf = collect_under(partials, knob("TOMIX_CAGG_DRIVER_MERGE_CAP"))
+                if pdf is not None:
                     days = self._merge_driver_write(pdf, man, batch_id)
                 else:
                     days = self._merge_spark_write(spark, partials, man, batch_id)

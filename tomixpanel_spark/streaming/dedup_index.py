@@ -56,6 +56,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from tomixpanel_spark.knobs import knob
+from tomixpanel_spark.operators.base import collect_under
 from tomixpanel_spark.streaming.genstore import (
     atomic_json_swap,
     cas_check,
@@ -80,12 +82,8 @@ _BUCKET_FRAME_CACHE: "_OrderedDict[tuple, object]" = _OrderedDict()
 _BUCKET_FRAME_CACHE_MAX = 512
 # per-frame row cap: a production-sized index bucket (manifest sizing
 # targets hundreds of MB) must NOT pin driver memory through the cache —
-# oversized frames are served but never cached (TOMIX_DIDX_CACHE_ROWS,
-# 0 disables caching entirely)
-
-
-def _bucket_cache_row_cap() -> int:
-    return int(os.environ.get("TOMIX_DIDX_CACHE_ROWS", "2000000"))
+# oversized frames are served but never cached
+_BUCKET_FRAME_CACHE_ROWS = 2_000_000
 
 
 class DedupIndex:
@@ -217,19 +215,13 @@ class DedupIndex:
             nb = self._effective_buckets(man)
             seq = man["gen_seq"] + 1
             spark = batch_df.sparkSession
-            cap = int(os.environ.get("TOMIX_DEDUP_INDEX_DRIVER_CAP", "65536"))
             # persist ONCE across the gate probe and whichever merge path
             # runs — without the pin the overflow path re-aggregates the
             # raw batch a second time
             hashes = self._batch_hashes(batch_df, nb).persist()
             try:
-                pdf = None
-                if cap > 0:
-                    # LIMIT cap+1 bounds the driver transfer: exactly-cap-
-                    # or-less means we hold ALL hashes; cap+1 rows proves
-                    # overflow without shipping the full table
-                    pdf = hashes.limit(cap + 1).toPandas()
-                if pdf is not None and len(pdf) <= cap:
+                pdf = collect_under(hashes, knob("TOMIX_DEDUP_INDEX_DRIVER_CAP"))
+                if pdf is not None:
                     buckets = self._merge_driver_write(pdf, man, batch_id, seq)
                 else:
                     buckets = self._merge_spark_write(
@@ -394,10 +386,9 @@ class DedupIndex:
                 self.n_buckets = n_buckets
                 return
             seq = man["gen_seq"] + 1
-            cap = int(os.environ.get("TOMIX_DEDUP_INDEX_DRIVER_CAP", "65536"))
             df = self.entries(spark)
-            pdf = df.limit(cap + 1).toPandas() if cap > 0 else None
-            if pdf is not None and len(pdf) <= cap:
+            pdf = collect_under(df, knob("TOMIX_DEDUP_INDEX_DRIVER_CAP"))
+            if pdf is not None:
                 buckets = self._rebucket_driver_write(pdf, n_buckets, seq)
             else:
                 gen = self._gen_dir(seq)
@@ -536,8 +527,7 @@ class DedupIndex:
                     else pd.DataFrame({"h": pd.array([], dtype="int64"),
                                        "first_doc_id": pd.array([], dtype="int64")})
                 )
-                cap = _bucket_cache_row_cap()
-                if cap > 0 and len(cached) <= cap:
+                if len(cached) <= _BUCKET_FRAME_CACHE_ROWS:
                     _BUCKET_FRAME_CACHE[ck] = cached
                     while len(_BUCKET_FRAME_CACHE) > _BUCKET_FRAME_CACHE_MAX:
                         _BUCKET_FRAME_CACHE.popitem(last=False)

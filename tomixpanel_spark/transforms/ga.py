@@ -346,17 +346,6 @@ def _exploded_event_columns() -> tuple:
 
 
 @lru_cache(maxsize=1)
-def _event_output_columns() -> tuple:
-    ev = F.col("ev")
-    return (
-        ev["event"].alias("event"),
-        F.col("distinct_id"),
-        ev["time_ms"].alias("time_ms"),
-        ev["props"].alias("props"),
-    )
-
-
-@lru_cache(maxsize=1)
 def _event_final_columns() -> tuple:
     """Final event projection built directly off the exploded ``ev``
     attribute in ONE select. The previous rename-select -> withColumn ->
