@@ -1,7 +1,9 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
+from unittest import mock
 
 import pytest
 
@@ -25,6 +27,21 @@ def spark():
     spark.sparkContext.setLogLevel("ERROR")
     yield spark
     spark.stop()
+
+
+ASOF_PLANS = ("broadcast", "window")
+
+
+@contextlib.contextmanager
+def asof_plan(plan: str):
+    """Set the as-of gate for ``plan``: unset for the broadcast plan (test
+    right sides fit), 0 for the window plan. A context manager rather than
+    a monkeypatch so Hypothesis tests can switch plans inside one example."""
+    with mock.patch.dict(os.environ):
+        os.environ.pop("TOMIX_ASOF_BCAST_ROWS", None)
+        if plan == "window":
+            os.environ["TOMIX_ASOF_BCAST_ROWS"] = "0"
+        yield
 
 
 @pytest.fixture(scope="session")

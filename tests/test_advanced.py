@@ -23,7 +23,6 @@ class TestReverseEtl:
         return valid_records(read_json_auto(spark, str(p), MP_EXPORT_SCHEMA))
 
     def test_amplitude_reverse_send(self, spark, tmp_path):
-        from tomixpanel_spark.sinks.reverse import send_reverse_amplitude
         from tomixpanel_spark.transforms.mixpanel import (
             mp_to_amplitude_events,
             mp_to_amplitude_users,
@@ -400,9 +399,9 @@ class TestAsofJoin:
             asof_join(left, right, on="k", left_time="t", right_time="rt")
 
     def test_plan_is_single_exchange_no_join(self, spark):
-        """The composition must stay union+window: one key exchange, no
-        join operator (a range-condition join would be a per-key cross
-        product Spark can only post-filter)."""
+        """Neither as-of plan may use a join operator (a range-condition
+        join would be a per-key cross product Spark can only
+        post-filter)."""
         from tests.conftest import SF_ORACLE
         from tomixpanel_spark.operators import registry
         from tomixpanel_spark.plans.audit import join_strategies
@@ -980,10 +979,23 @@ class TestAnnIvfQuantized:
         assert len(part & full) / len(full) >= 0.5
 
 
+def _asof_under_both_plans(build):
+    """{plan: the DataFrame ``build()`` returns under that as-of plan}."""
+    from tests.conftest import ASOF_PLANS, asof_plan
+    from tomixpanel_spark.operators import asof
+
+    out = {}
+    for plan in ASOF_PLANS:
+        with asof_plan(plan):
+            out[plan] = build()
+            assert asof.LAST_STRATEGY == plan
+    return out
+
+
 class TestAsofStrategies:
-    def test_cogroup_strategy_equals_window_strategy(self, spark):
+    def test_broadcast_plan_equals_window_plan(self, spark):
         """Both physical shapes of the as-of join — the all-JVM
-        union+window carry and the Arrow cogroup pd.merge_asof — are ONE
+        union+window carry and the broadcast pd.merge_asof — are ONE
         operator: identical rows on a fixture exercising missing
         matches, exact-time ties (tiebreak resolution), left-only keys,
         right-only keys, and both directions."""
@@ -1011,60 +1023,33 @@ class TestAsofStrategies:
             (tuple(str(x) for x in row) for row in map(tuple, df.select(*sorted(df.columns)).collect()))
         )
         for direction in ("backward", "forward"):
-            w = asof_join(
+            plans = _asof_under_both_plans(lambda: asof_join(
                 left, right, on="k", left_time="t", right_time="rt",
                 right_tiebreak=("rid",), direction=direction,
+            ))
+            assert canon(plans["broadcast"]) == canon(plans["window"]), (
+                f"broadcast diverges from window ({direction})"
             )
-            for other in ("cogroup", "broadcast"):
-                o = asof_join(
-                    left, right, on="k", left_time="t", right_time="rt",
-                    right_tiebreak=("rid",), direction=direction,
-                    strategy=other,
-                )
-                assert canon(w) == canon(o), f"{other} diverges ({direction})"
-        back = asof_join(
+        back = _asof_under_both_plans(lambda: asof_join(
             left, right, on="k", left_time="t", right_time="rt",
-            right_tiebreak=("rid",), strategy="cogroup",
-        )
-        by_tag = {r["tag"]: (r["rid"], r["val"]) for r in back.collect()}
-        assert by_tag["l1"] == (101, 8.5)
-        assert by_tag["l4"] == (None, None)
+            right_tiebreak=("rid",),
+        ))
+        for df in back.values():
+            by_tag = {r["tag"]: (r["rid"], r["val"]) for r in df.collect()}
+            assert by_tag["l1"] == (101, 8.5)
+            assert by_tag["l4"] == (None, None)
 
-    def test_registered_asof_query_matches_cogroup(self, spark):
-        """The registered asof_latest_order re-run through the cogroup
-        strategy returns the identical result set."""
-        from tomixpanel_spark.operators.asof import asof_join
+    def test_registered_asof_query_matches_window_plan(self, spark):
+        """The registered asof_latest_order (broadcast at this scale)
+        re-run through the window plan returns the identical result
+        set."""
+        from tests.conftest import SF_SMALL
         from tomixpanel_spark.operators import registry
 
-        from pyspark.sql import functions as F
-        from tomixpanel_spark.operators.base import table
-
-        sf = "/root/testdata/sf0.001"
-        reg = registry()
-        want = sorted(map(tuple, reg["asof_latest_order"].fn(spark, sf).collect()))
-        ev = table(spark, sf, "events").select("event_id", "user_id", "ts")
-        orders = table(spark, sf, "orders")
-        r = orders.select(
-            F.pmod("o_custkey", F.lit(150)).cast("bigint").alias("user_id"),
-            F.expr(
-                "timestampadd(HOUR, cast(o_orderkey % 720 as int), "
-                "timestamp'2024-01-01 00:00:00')"
-            ).alias("ts_r"),
-            F.col("o_orderkey").alias("order_key"),
-            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("total_c"),
-        )
-        got = sorted(
-            map(
-                tuple,
-                asof_join(
-                    ev, r, on="user_id", left_time="ts", right_time="ts_r",
-                    right_tiebreak=("order_key",), strategy="cogroup",
-                )
-                .select("event_id", "user_id", "order_key", "total_c")
-                .collect(),
-            )
-        )
-        assert got == want
+        fn = registry()["asof_latest_order"].fn
+        plans = _asof_under_both_plans(lambda: fn(spark, SF_SMALL))
+        got = {p: sorted(map(tuple, df.collect())) for p, df in plans.items()}
+        assert got["window"] == got["broadcast"]
 
     def test_broadcast_merge_chunking_is_result_invariant(self, spark, monkeypatch):
         """The broadcast tier accumulates Arrow batches into bounded
@@ -1083,7 +1068,7 @@ class TestAsofStrategies:
         assert got == want
 
     def test_auto_gate_falls_back_to_window_above_cap(self, spark, monkeypatch):
-        """strategy='auto' counts the right side: under the cap it takes
+        """The gate counts the right side: at or under the cap it takes
         the zero-left-shuffle broadcast plan (mapInPandas, no Exchange on
         the left), above it the window plan (Exchange + Window) — the
         decontam-style runtime gate, both physical shapes verified by the
@@ -1098,10 +1083,8 @@ class TestAsofStrategies:
         )
 
         def plan(cap):
-            df = asof_join(
-                left, right, on="k", left_time="t", right_time="rt",
-                strategy="auto", broadcast_cap=cap,
-            )
+            monkeypatch.setenv("TOMIX_ASOF_BCAST_ROWS", str(cap))
+            df = asof_join(left, right, on="k", left_time="t", right_time="rt")
             return df, df._jdf.queryExecution().executedPlan().toString()
 
         bc_df, bc_plan = plan(cap=10)
@@ -1112,10 +1095,8 @@ class TestAsofStrategies:
             map(tuple, df.select(*sorted(df.columns)).collect())
         )
         assert canon(bc_df) == canon(win_df)
-        # env default also honored
-        monkeypatch.setenv("TOMIX_ASOF_BCAST_ROWS", "0")
-        _, env_plan = plan(cap=None)
-        assert "Window" in env_plan
+        _, zero_plan = plan(cap=0)  # 0 forces the window plan
+        assert "Window" in zero_plan
 
 
 class TestAnnPq:
@@ -1193,11 +1174,11 @@ class TestBm25Edges:
 
 class TestAsofBroadcastDtypes:
     def test_timestamp_columns_through_broadcast(self, spark):
-        """The broadcast strategy's dtype-coercion branch: Arrow batches
+        """The broadcast plan's dtype-coercion branch: Arrow batches
         deliver datetime64[us] while driver toPandas may deliver
         datetime64[ns] — merge_asof requires equal dtypes, so the small
         side coerces. Verify timestamps roundtrip and match the window
-        strategy exactly."""
+        plan exactly."""
         from tomixpanel_spark.operators.asof import asof_join
 
         left = spark.createDataFrame(
@@ -1211,11 +1192,11 @@ class TestAsofBroadcastDtypes:
         canon = lambda df: sorted(  # noqa: E731
             map(tuple, df.select(*sorted(df.columns)).collect())
         )
-        w = asof_join(left, right, on="k", left_time="t", right_time="rt")
-        b = asof_join(
-            left, right, on="k", left_time="t", right_time="rt", strategy="broadcast"
+        plans = _asof_under_both_plans(
+            lambda: asof_join(left, right, on="k", left_time="t", right_time="rt")
         )
-        assert canon(w) == canon(b)
+        b = plans["broadcast"]
+        assert canon(plans["window"]) == canon(b)
         vals = {r["tag"]: r["val"] for r in b.collect()}
         assert vals == {"a": 7, "b": 9}
 

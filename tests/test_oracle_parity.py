@@ -163,3 +163,21 @@ def test_driver_canon_check_catches_single_column_lists():
         check(["pieces"], [(["a", "b"],), (["c"],)])
     # scalar single column passes
     check(["id"], [(1,), (2,)])
+
+
+@pytest.mark.parametrize(
+    "name", ["asof_latest_order", "asof_next_order", "attribution_last_touch"]
+)
+def test_asof_window_plan_matches_oracle(name, spark, duck, monkeypatch):
+    """At this scale the sweep above takes the as-of broadcast plan;
+    gate 0 pins the window plan to the same DuckDB oracle."""
+    from tomixpanel_spark.operators import asof
+
+    monkeypatch.setenv("TOMIX_ASOF_BCAST_ROWS", "0")
+    sdf = REG[name].fn(spark, SF_ORACLE)
+    assert asof.LAST_STRATEGY == "window"
+    ores = duck.execute(REG[name].oracle)
+    ocols = [d[0] for d in ores.description]
+    assert _canon_rows(list(sdf.columns), [tuple(r) for r in sdf.collect()]) == (
+        _canon_rows(ocols, [tuple(r) for r in ores.fetchall()])
+    )

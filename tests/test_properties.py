@@ -15,6 +15,7 @@ import os
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from tests.conftest import ASOF_PLANS, asof_plan
 from tomixpanel_spark.sinks.batching import batch_payload, iter_batches, serialize_record
 
 records = st.lists(
@@ -309,13 +310,15 @@ class TestRewriteEquivalence:
 class TestJoinOperatorsVsBruteForce:
     """asof_join and range_join re-express semantics engines ship natively;
     beyond the DuckDB oracle (one dataset), these pin them against a
-    literal Python brute force on randomized inputs."""
+    literal Python brute force on randomized inputs. The as-of properties
+    run both of its plans."""
 
     @given(st.integers(0, 2**32 - 1))
     @settings(max_examples=12, deadline=None)
     def test_asof_join_matches_brute_force(self, spark, seed):
         import random
 
+        from tomixpanel_spark.operators import asof
         from tomixpanel_spark.operators.asof import asof_join
 
         rng = random.Random(seed)
@@ -328,13 +331,6 @@ class TestJoinOperatorsVsBruteForce:
         ]
         left = spark.createDataFrame(left_rows, "lid long, k string, t long")
         right = spark.createDataFrame(right_rows, "k string, rt long, val long")
-        got = {
-            (r["lid"], r["val"])
-            for r in asof_join(
-                left, right, on="k", left_time="t", right_time="rt",
-                right_tiebreak=("val",),
-            ).collect()
-        }
         want = set()
         for lid, k, t in left_rows:
             cand = [(rt, val) for (rk, rt, val) in right_rows if rk == k and rt <= t]
@@ -344,15 +340,6 @@ class TestJoinOperatorsVsBruteForce:
                 want.add((lid, val))
             else:
                 want.add((lid, None))
-        assert got == want
-
-        got_fwd = {
-            (r["lid"], r["val"])
-            for r in asof_join(
-                left, right, on="k", left_time="t", right_time="rt",
-                right_tiebreak=("val",), direction="forward",
-            ).collect()
-        }
         want_fwd = set()
         for lid, k, t in left_rows:
             cand = [(rt, val) for (rk, rt, val) in right_rows if rk == k and rt >= t]
@@ -362,7 +349,28 @@ class TestJoinOperatorsVsBruteForce:
                 want_fwd.add((lid, val))
             else:
                 want_fwd.add((lid, None))
-        assert got_fwd == want_fwd
+
+        for plan in ASOF_PLANS:
+            with asof_plan(plan):
+                got = {
+                    (r["lid"], r["val"])
+                    for r in asof_join(
+                        left, right, on="k", left_time="t", right_time="rt",
+                        right_tiebreak=("val",),
+                    ).collect()
+                }
+                assert asof.LAST_STRATEGY == plan
+                assert got == want, plan
+
+                got_fwd = {
+                    (r["lid"], r["val"])
+                    for r in asof_join(
+                        left, right, on="k", left_time="t", right_time="rt",
+                        right_tiebreak=("val",), direction="forward",
+                    ).collect()
+                }
+                assert asof.LAST_STRATEGY == plan
+                assert got_fwd == want_fwd, plan
 
     @given(st.integers(0, 2**32 - 1))
     @settings(max_examples=10, deadline=None)
@@ -372,6 +380,7 @@ class TestJoinOperatorsVsBruteForce:
         from an older/losing right row (the per-column last() bug)."""
         import random
 
+        from tomixpanel_spark.operators import asof
         from tomixpanel_spark.operators.asof import asof_join
 
         rng = random.Random(seed)
@@ -392,13 +401,6 @@ class TestJoinOperatorsVsBruteForce:
         ]
         left = spark.createDataFrame(left_rows, "lid long, k string, t long")
         right = spark.createDataFrame(right_rows, "k string, rt long, tb long, v long")
-        got = {
-            (r["lid"], r["tb"], r["v"])
-            for r in asof_join(
-                left, right, on="k", left_time="t", right_time="rt",
-                right_tiebreak=("tb",),
-            ).collect()
-        }
         want = set()
         for lid, k, t in left_rows:
             cand = [(rt, tb, v) for (rk, rt, tb, v) in right_rows if rk == k and rt <= t]
@@ -412,7 +414,17 @@ class TestJoinOperatorsVsBruteForce:
                 want.add((lid, winner[0], winner[1]))
             else:
                 want.add((lid, None, None))
-        assert got == want
+        for plan in ASOF_PLANS:
+            with asof_plan(plan):
+                got = {
+                    (r["lid"], r["tb"], r["v"])
+                    for r in asof_join(
+                        left, right, on="k", left_time="t", right_time="rt",
+                        right_tiebreak=("tb",),
+                    ).collect()
+                }
+                assert asof.LAST_STRATEGY == plan
+                assert got == want, plan
 
     @given(st.integers(0, 2**32 - 1))
     @settings(max_examples=8, deadline=None)

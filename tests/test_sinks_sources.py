@@ -278,6 +278,38 @@ class TestHttpSink:
         assert receipts[0]["attempts"] == 2
         assert len(stub.requests) == 2  # exactly one POST per attempt
 
+    @pytest.mark.parametrize("gz", [True, False], ids=["gzip", "plain"])
+    @pytest.mark.parametrize(
+        "shape", ["json-array", "amplitude-v2", "identify-form", "woopra-ndjson"]
+    )
+    def test_every_body_shape_with_and_without_gzip(self, spark, stub, shape, gz):
+        """One body builder serves every sink: each envelope, gzipped or
+        not, reaches the stub whole (it decodes every record) with the
+        matching Content-Encoding."""
+        import dataclasses
+
+        from tomixpanel_spark.sinks import reverse
+        from tomixpanel_spark.sinks.http import (
+            HttpSink,
+            HttpSinkConfig,
+            mp_event_record,
+            summarize_receipts,
+        )
+
+        sink = {
+            "json-array": lambda: HttpSink(HttpSinkConfig(url=""), mp_event_record),
+            "amplitude-v2": lambda: reverse.amplitude_events_sink("KEY"),
+            "identify-form": lambda: reverse.amplitude_users_sink("KEY"),
+            "woopra-ndjson": lambda: reverse.woopra_sink("proj"),
+        }[shape]()
+        sink.cfg = dataclasses.replace(sink.cfg, gzip=gz, url=stub.url)
+        summary = summarize_receipts(sink.send(_events_df(spark, 25), concurrency=1))
+        assert summary["imported"] == 25 and summary["failed"] == 0
+        assert sum(r["n"] for r in stub.requests) == 25
+        assert all(r["gzip"] is gz for r in stub.requests)
+        envelope = {"api_key": "KEY"} if shape in ("amplitude-v2", "identify-form") else None
+        assert all(r["envelope"] == envelope for r in stub.requests)
+
 
 class TestSources:
     def test_amplitude_hour_slices_and_fetch(self, spark, tmp_path):
@@ -359,14 +391,12 @@ class TestSources:
 
     def test_file_skip_gate_drops_whole_file(self, spark, tmp_path):
         """V1 whole-file fidelity (gaToMixpanel.js:51-57): one bad line
-        discards its FILE under the file-skip gate while row-level salvage
-        keeps the file's good lines."""
+        discards its FILE under the file-skip gate (no constraints: the
+        shape-only gate) while row-level salvage keeps the file's good
+        lines."""
+        from tomixpanel_spark.functions.schema_constraints import constraint_file_skip
         from tomixpanel_spark.schemas import MP_EXPORT_SCHEMA
-        from tomixpanel_spark.sources.staging import (
-            read_json_auto,
-            valid_records,
-            valid_records_file_skip,
-        )
+        from tomixpanel_spark.sources.staging import read_json_auto, valid_records
 
         good = tmp_path / "good.ndjson"
         good.write_text(mp_export_lines(5))
@@ -374,11 +404,32 @@ class TestSources:
         bad.write_text(mp_export_lines(3) + "NOT JSON\n")
         df = read_json_auto(spark, [str(good), str(bad)], MP_EXPORT_SCHEMA)
         assert valid_records(df).count() == 8  # row salvage keeps 3 of 4
-        kept = valid_records_file_skip(df)
+        kept = constraint_file_skip(df, {})
         assert kept.count() == 5  # whole bad file skipped
         assert "_src_file" not in kept.columns and "_corrupt_record" not in kept.columns
-        # threshold generalization: tolerate 1 bad line per file
-        assert valid_records_file_skip(df, max_corrupt_per_file=1).count() == 8
+
+    def test_csv_scan_stages_under_the_temp_dir(self, spark, tmp_path, monkeypatch):
+        """csv_scan stages its CSV copy under tempfile.gettempdir(), not a
+        fixed /tmp path, publishes it as one finished directory (no
+        private copy left behind), and reads exactly the table's rows."""
+        import tempfile
+
+        import duckdb
+
+        from tests.conftest import SF_SMALL
+        from tomixpanel_spark.sources.csv import _CSV_SCAN_SQL, csv_scan
+
+        monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+        got = sorted(map(tuple, csv_scan(spark, SF_SMALL).collect()))
+        staged = list((tmp_path / "tomixpanel_stage").iterdir())
+        assert [p.name[:11] for p in staged] == ["events_csv_"]
+        assert (staged[0] / "events.csv").is_file()
+        con = duckdb.connect()
+        con.execute(f"CREATE VIEW events AS SELECT * FROM '{SF_SMALL}/events.parquet'")
+        assert got == sorted(con.execute(_CSV_SCAN_SQL).fetchall())
+        con.close()
+        # a later call reads the published copy
+        assert sorted(map(tuple, csv_scan(spark, SF_SMALL).collect())) == got
 
     def test_zip_expand_and_gzip_sniff(self, tmp_path):
         import io

@@ -357,11 +357,9 @@ class TestSchemaGateDelta:
         pins the delta so the behavior is documented, not implicit."""
         import json
 
+        from tomixpanel_spark.functions.schema_constraints import constraint_file_skip
         from tomixpanel_spark.schemas import GA_SESSION_SCHEMA
-        from tomixpanel_spark.sources.staging import (
-            read_json_auto,
-            valid_records_file_skip,
-        )
+        from tomixpanel_spark.sources.staging import read_json_auto
 
         good = {
             "visitNumber": "1",
@@ -389,7 +387,7 @@ class TestSchemaGateDelta:
         f_bad.write_text(json.dumps(shape_bad))
 
         df = read_json_auto(spark, [str(f_ok), str(f_bad)], GA_SESSION_SCHEMA)
-        kept = valid_records_file_skip(df)
+        kept = constraint_file_skip(df, {})  # no constraints: shape-only gate
         ids = {r["visitId"] for r in kept.select("visitId").collect()}
         # the shape-corrupt file is skipped whole (reference parity)...
         assert "v3" not in ids

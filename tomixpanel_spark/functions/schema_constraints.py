@@ -137,11 +137,14 @@ def compile_constraints(schema: dict) -> Column:
 
 
 def constraint_file_skip(df: DataFrame, schema: dict) -> DataFrame:
-    """Reference-fidelity gate (V1, both halves): drop every file
-    containing a SHAPE-corrupt row (the typed-read corrupt-record gate,
-    as before) OR a well-shaped row violating the compiled draft-04
-    constraints. One scan; the violating-file list is a tiny broadcast
-    anti-join, exactly like ``staging.valid_records_file_skip``."""
+    """Reference-fidelity whole-file skip (V1, both halves; the reference
+    skips the ENTIRE file on any error, transform/gaToMixpanel.js:51-57):
+    drop every file containing a SHAPE-corrupt row (the typed-read
+    corrupt-record gate) OR a well-shaped row violating the compiled
+    draft-04 constraints. ``schema={}`` compiles to no constraint: the
+    shape-only gate. One scan; corrupt counts group by the provenance
+    column stamped at scan time, and the violating-file list is a tiny
+    broadcast anti-join."""
     from tomixpanel_spark.sources.staging import CORRUPT_COL, SRC_FILE_COL, _drop_meta
 
     if SRC_FILE_COL not in df.columns:

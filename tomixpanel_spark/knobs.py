@@ -48,7 +48,7 @@ KNOBS: dict[str, Knob] = {
     # hundreds of MB on the driver — comfortably collectable.
     "TOMIX_CC_LOCAL_MAX": Knob(2_000_000, "distinct edges for driver union-find components"),
     "TOMIX_LM_BCAST_BIGRAMS": Knob(2_000_000, "bigram types for the bigram-LM model broadcast"),
-    "TOMIX_ASOF_BCAST_ROWS": Knob(1_000_000, "right rows for as-of strategy='auto' broadcast"),
+    "TOMIX_ASOF_BCAST_ROWS": Knob(1_000_000, "right rows for the as-of join's broadcast plan"),
     "TOMIX_ASOF_MERGE_ROWS": Knob(262_144, "left rows per merge_asof call in the broadcast as-of"),
     "TOMIX_DEDUP_INDEX_DRIVER_CAP": Knob(65_536, "batch hashes for the dedup index driver merge"),
     "TOMIX_CAGG_DRIVER_MERGE_CAP": Knob(65_536, "partial cells for the cagg driver merge"),

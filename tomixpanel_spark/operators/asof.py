@@ -2,25 +2,29 @@
 time, per key — the point-in-time lookup engines like DuckDB ship natively
 (``ASOF JOIN``) and Spark lacks.
 
-Spark-first composition (no UDF, no range self-join): union both sides
-into one keyed stream, sort within each key partition by (time, side) so
-right rows precede left rows at equal times (inclusive at-or-before), and
-carry the right-side values forward with ``last(..., ignorenulls=True)``
-over an unbounded-preceding running frame. Left rows then read their
-point-in-time values directly.
+One size gate picks between two plans with the same semantics: the right
+side is counted (a bounded, memoized probe), and at or under
+``TOMIX_ASOF_BCAST_ROWS`` rows it is broadcast, otherwise the plan is the
+union+window carry.
 
-Scale shape: ONE exchange on the key + a partition-local sort — the same
-cost as the sort-merge join Spark would need anyway, with no
-range-condition explosion (a naive ``left.ts >= right.ts`` join is a
-per-key cross product that Spark can only post-filter). Key skew behaves
-like any keyed shuffle (AQE skew handling applies). When the right side
-is dimension-sized, the gated ``broadcast`` strategy removes even that
-exchange: the fact-side stream is merged in place against a broadcast
-sorted right side (the as-of analogue of a broadcast-hash join).
+* **Broadcast** (the right side is dimension-sized: latest order state,
+  quotes, config history): the sorted right side ships once as a broadcast
+  variable and each left Arrow batch runs ``pd.merge_asof(by=key)`` in
+  place. The fact side never shuffles — the as-of analogue of a
+  broadcast-hash join.
+* **Window** (no UDF, no range self-join): union both sides into one keyed
+  stream, sort within each key partition by (time, side) so right rows
+  precede left rows at equal times (inclusive at-or-before), and carry the
+  right-side values forward with ``last(..., ignorenulls=True)`` over an
+  unbounded-preceding running frame. ONE exchange on the key + a
+  partition-local sort — the cost of the sort-merge join Spark would need
+  anyway, with no range-condition explosion (a naive
+  ``left.ts >= right.ts`` join is a per-key cross product that Spark can
+  only post-filter). Key skew behaves like any keyed shuffle.
 
 Oracle: DuckDB's native ``ASOF LEFT JOIN`` — an INDEPENDENT implementation
-of the same semantics, so the hash comparison cross-checks the window
-composition against a reference engine, not against our own SQL.
+of the same semantics, so the hash comparison cross-checks both plans
+against a reference engine, not against our own SQL.
 """
 
 from __future__ import annotations
@@ -46,8 +50,6 @@ def asof_join(
     right_time: str,
     right_tiebreak: tuple[str, ...] = (),
     direction: str = "backward",
-    strategy: str = "window",
-    broadcast_cap: int | None = None,
 ) -> DataFrame:
     """Left as-of join: all ``left`` columns plus ``right``'s value
     columns (everything but ``on``/``right_time``) taken from the
@@ -55,49 +57,24 @@ def asof_join(
     ``direction="backward"`` (default) matches the LATEST right row with
     ``right_time <= left_time``; ``direction="forward"`` the EARLIEST
     with ``right_time >= left_time`` (the next-reading / next-quote
-    shape) — same single exchange + window, just a reversed time sort.
+    shape) — the same plans, just a reversed time order.
 
     If the right side has several rows per (key, time), pass
     ``right_tiebreak`` columns: the row sorting LAST under them
-    (ascending) wins — resolved inside the one window sort this operator
-    already pays, so no pre-aggregation exchange is needed. Without a
+    (ascending) wins — resolved inside the sort each plan already pays,
+    so no pre-aggregation exchange is needed. Without a
     tiebreak, pre-aggregate the right side (e.g. ``max_by``) or the
     match is not well defined.
 
-    ``strategy`` picks the physical shape (same semantics, asserted
-    equal in tests):
-      * ``"window"`` (default) — union both sides through ONE exchange
-        on the key, carry right values with a running last(ignorenulls)
-        window. All-JVM, whole-stage-codegen sort.
-      * ``"cogroup"`` — groupBy(key).cogroup + ``applyInPandas`` running
-        ``pd.merge_asof`` per key group: one exchange per side, the
-        sorted merge itself in C. The Arrow transfer makes it the slower
-        choice for narrow rows, but it wins when right VALUE payloads
-        are wide (the window form carries the whole value struct through
-        the JVM sort; the cogroup form merges on (key, time) positions).
-        Per-key state must fit a task (same bound as any cogroup).
-      * ``"broadcast"`` — collect + sort the right side ONCE on the
-        driver, broadcast it, and run ``pd.merge_asof(by=key)`` inside
-        ``mapInPandas`` over the left: the LEFT SIDE NEVER SHUFFLES.
-        This is the as-of analogue of a broadcast-hash join — the right
-        side is usually dimension-like (latest order state, quotes,
-        config history) and orders of magnitude smaller than the event
-        stream, so at 100 TB the fact table stays put and only the small
-        side moves. Caller-asserted fit (use ``"auto"`` for the gated
-        form).
-      * ``"auto"`` — count the right side (one cheap aggregate job) and
-        take ``"broadcast"`` when it is at or under ``broadcast_cap``
-        (default ``TOMIX_ASOF_BCAST_ROWS``, 1,000,000 rows), else fall
-        back to ``"window"`` — the same count-the-build-side runtime
-        gate ``decontam_overlap`` uses, so a right side that outgrows
-        executor memory degrades to the shuffle plan instead of OOMing.
+    The plan follows the size of the right side (module docstring): at
+    or under ``TOMIX_ASOF_BCAST_ROWS`` rows (default 1,000,000) the
+    broadcast plan, above it the union+window plan — the same
+    count-the-build-side runtime gate ``decontam_overlap`` uses, so a
+    right side that outgrows executor memory degrades to the shuffle
+    plan instead of OOMing. ``LAST_STRATEGY`` records the choice.
     """
     if direction not in ("backward", "forward"):
         raise ValueError(f"direction must be backward|forward, got {direction!r}")
-    if strategy not in ("window", "cogroup", "broadcast", "auto"):
-        raise ValueError(
-            f"strategy must be window|cogroup|broadcast|auto, got {strategy!r}"
-        )
     left_cols = [c for c in left.columns if c != on]
     value_cols = [c for c in right.columns if c not in (on, right_time)]
     overlap = set(left_cols) & set(value_cols)
@@ -105,30 +82,22 @@ def asof_join(
         raise ValueError(f"column collision between sides: {sorted(overlap)}")
     if not value_cols:
         raise ValueError("right side has no value columns to carry")
-    if strategy == "auto":
-        cap = broadcast_cap
-        if cap is None:
-            cap = knob("TOMIX_ASOF_BCAST_ROWS")
-        # gate count is BOUNDED (limit cap+1 proves overflow without a
-        # full count) and memoized per (application, right plan, cap) —
-        # repeated auto calls on the same dimension table cost one job,
-        # not one per invocation. The memo is LRU-bounded, so a
-        # long-lived app re-probes eventually rather than pinning a stale
-        # "fits" verdict for a right table whose files grow.
-        n_right = memo_count(
-            right.sparkSession,
-            ("asof_gate", right.semanticHash(), cap),
-            right.limit(cap + 1),
-        )
-        strategy = "broadcast" if n_right <= cap else "window"
+    cap = knob("TOMIX_ASOF_BCAST_ROWS")
+    # gate count is BOUNDED (limit cap+1 proves overflow without a full
+    # count) and memoized per (application, right plan, cap) — repeated
+    # calls on the same dimension table cost one job, not one per
+    # invocation. The memo is LRU-bounded, so a long-lived app re-probes
+    # eventually rather than pinning a stale "fits" verdict for a right
+    # table whose files grow.
+    n_right = memo_count(
+        right.sparkSession,
+        ("asof_gate", right.semanticHash(), cap),
+        right.limit(cap + 1),
+    )
     global LAST_STRATEGY
-    LAST_STRATEGY = strategy  # probe/test observable (identity.LAST_DISTRIBUTED_ROUNDS precedent)
-    if strategy == "cogroup":
-        return _asof_cogroup(
-            left, right, on, left_time, right_time, right_tiebreak, direction,
-            left_cols, value_cols,
-        )
-    if strategy == "broadcast":
+    # probe/test observable (identity.LAST_DISTRIBUTED_ROUNDS precedent)
+    LAST_STRATEGY = "broadcast" if n_right <= cap else "window"
+    if LAST_STRATEGY == "broadcast":
         return _asof_broadcast(
             left, right, on, left_time, right_time, right_tiebreak, direction,
             left_cols, value_cols,
@@ -194,12 +163,12 @@ def asof_join(
 
 
 def _arrow_out_schema(left, right, on, left_time, left_cols, value_cols):
-    """Output schema for the Arrow strategies. Right VALUE fields are
+    """Output schema of the broadcast plan. Right VALUE fields are
     rebuilt nullable: an unmatched left row emits typed nulls, and a
     non-nullable source field (aggregate counts, spark.range ids) must
     not smuggle its nullable=False into the output — Catalyst would
     treat the column as never-null and prune IsNotNull filters, the
-    exact hazard the window strategy's explicit StructField(..., True)
+    exact hazard the window plan's explicit StructField(..., True)
     guards against."""
     from pyspark.sql.types import StructField, StructType
 
@@ -210,81 +179,6 @@ def _arrow_out_schema(left, right, on, left_time, left_cols, value_cols):
             StructField(c, right.schema[c].dataType, True)
             for c in value_cols
         ]
-    )
-
-
-def _asof_cogroup(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_time: str,
-    right_time: str,
-    right_tiebreak: tuple[str, ...],
-    direction: str,
-    left_cols: list[str],
-    value_cols: list[str],
-) -> DataFrame:
-    """The Arrow strategy: per-key ``pd.merge_asof``. Tie handling
-    mirrors the window strategy exactly — among right rows at one
-    (key, time), the max-tiebreak row wins: merge_asof(backward) matches
-    the LAST qualifying position, so the right frame sorts (time ASC,
-    tiebreak ASC); merge_asof(forward) matches the FIRST, so ties sort
-    DESC. Missing matches keep typed nulls (NaN-poisoned int columns are
-    rebuilt as nullable objects before Arrow conversion)."""
-    import pandas as pd
-
-    from tomixpanel_spark.session import ship_package
-
-    ship_package(left.sparkSession)
-    out_schema = _arrow_out_schema(left, right, on, left_time, left_cols, value_cols)
-    out_cols = [f.name for f in out_schema.fields]
-    tie_asc = direction == "backward"
-    # a right time column named like the left one would collide in the
-    # merged frame — give it a reserved name inside the merge
-    rt = right_time if right_time != left_time else "__rt"
-
-    def merge(l_pdf: pd.DataFrame, r_pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(l_pdf):
-            return pd.DataFrame(columns=out_cols)
-        l_sorted = l_pdf.sort_values(left_time, kind="stable")
-        if not len(r_pdf):
-            out = l_sorted.copy()
-            for c in value_cols:
-                out[c] = None
-            return out[out_cols]
-        r_sorted = (
-            r_pdf.rename(columns={right_time: rt})
-            .sort_values(
-                [rt, *right_tiebreak],
-                ascending=[True] + [tie_asc] * len(right_tiebreak),
-                kind="stable",
-            )
-            .drop(columns=[on])
-        )
-        out = pd.merge_asof(
-            l_sorted,
-            r_sorted,
-            left_on=left_time,
-            right_on=rt,
-            direction=direction,
-            allow_exact_matches=True,
-        ).drop(columns=[rt])
-        for c in value_cols:
-            # merge misses NaN-poison integer columns to float — rebuild
-            # as nullable objects so Arrow sees typed nulls
-            if out[c].isna().any():
-                out[c] = out[c].astype(object).where(out[c].notna(), None)
-        return out[out_cols]
-
-    # fresh_attrs guards the caller passing two frames derived from ONE
-    # parent plan: shared attribute ids across a cogroup mis-prune the
-    # right child under no-output consumers (base.fresh_attrs)
-    from tomixpanel_spark.operators.base import fresh_attrs
-
-    return (
-        left.groupBy(on)
-        .cogroup(fresh_attrs(right).groupBy(on))
-        .applyInPandas(lambda l, r: merge(l, r), schema=out_schema)
     )
 
 
@@ -299,10 +193,12 @@ def _asof_broadcast(
     left_cols: list[str],
     value_cols: list[str],
 ) -> DataFrame:
-    """The zero-left-shuffle strategy: the whole (sorted) right side is a
+    """The zero-left-shuffle plan: the whole (sorted) right side is a
     Spark broadcast variable; each Arrow batch of the left runs one
-    ``pd.merge_asof(by=key)`` against it. Tie semantics match the other
-    strategies (right pre-sorted so the max-tiebreak row is the match).
+    ``pd.merge_asof(by=key)`` against it. Tie semantics match the window
+    plan: among right rows at one (key, time) the max-tiebreak row wins —
+    merge_asof(backward) matches the LAST qualifying position, so ties
+    sort ASC; merge_asof(forward) matches the FIRST, so ties sort DESC.
     The left keeps its source partitioning — filters/pruning stay pushed
     down and no exchange is introduced."""
     import pandas as pd
@@ -391,7 +287,7 @@ def asof_latest_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     at-or-before the event time. Order times are synthesized into the
     events' range with deterministic modular rules (both engines derive
     the identical right side). Ties per (user, time) resolve to the max
-    orderkey via the window tiebreak — the oracle pre-aggregates with
+    orderkey via the in-sort tiebreak — the oracle pre-aggregates with
     max_by instead, so the hash match also proves the in-sort tiebreak
     equals an explicit pre-aggregation (one exchange saved here)."""
     ev = table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
@@ -407,7 +303,7 @@ def asof_latest_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return asof_join(
         ev, r, on="user_id", left_time="ts", right_time="ts_r",
-        right_tiebreak=("order_key",), strategy="auto",
+        right_tiebreak=("order_key",),
     ).select("event_id", "user_id", "order_key", "total_c")
 
 
@@ -430,10 +326,9 @@ FROM events e ASOF LEFT JOIN r
 def attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Marketing-style last-touch attribution: each purchase attributed
     to the user's latest click at-or-before it (null when none). Pure
-    reuse of ``asof_join`` — same single exchange + window sort; the
-    in-sort tiebreak (max event_id among same-instant clicks) is proved
-    against the oracle's explicit max_by pre-aggregation, like
-    ``asof_latest_order``."""
+    reuse of ``asof_join``; the in-sort tiebreak (max event_id among
+    same-instant clicks) is proved against the oracle's explicit max_by
+    pre-aggregation, like ``asof_latest_order``."""
     ev = table(spark, sf_dir, "events")
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts"
@@ -446,7 +341,7 @@ def attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return asof_join(
         purchases, clicks, on="user_id", left_time="ts", right_time="ts_c",
-        right_tiebreak=("click_id",), strategy="auto",
+        right_tiebreak=("click_id",),
     ).select("event_id", "user_id", "click_id", "click_ms")
 
 
@@ -483,7 +378,7 @@ def asof_next_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return asof_join(
         ev, r, on="user_id", left_time="ts", right_time="ts_r",
-        right_tiebreak=("order_key",), direction="forward", strategy="auto",
+        right_tiebreak=("order_key",), direction="forward",
     ).select("event_id", "user_id", "order_key", "total_c")
 
 

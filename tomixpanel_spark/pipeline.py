@@ -6,9 +6,23 @@ A job config is the same shape a reference user writes:
     {
       "source": {"name": "csv" | "amplitude" | "ga" | "mixpanel",
                   "options": {...}},
-      "destination": {"name": "mixpanel", "token": "...",
-                       "service_account": "...", "options": {...}}
+      "destination": {"name": "mixpanel", "token": "...", "options": {...}}
     }
+
+``run`` reads these destination keys and ignores any other:
+
+  * ``name``: ``"mixpanel"`` (default), or ``"amplitude"`` / ``"woopra"``
+    for the reverse path; ``token``: the project token for profiles;
+  * ``options``: ``import_url``, ``engage_url``, ``headers``,
+    ``recordsPerBatch``, ``profilesPerBatch``, ``gzip``, ``strict``,
+    ``min_interval_s``, ``save_local_copy``, ``save_dir``. ``/import``
+    requests carry auth only through ``headers`` (a Basic Authorization
+    header; ``sinks.http.mixpanel_import_sink`` builds one from
+    service-account credentials, but ``run`` does not);
+  * the reverse destinations also read ``api_key`` (amplitude),
+    ``project`` / ``domain`` and ``username`` / ``password`` (woopra),
+    and the options ``httpapi_url``, ``identify_url``, ``pacing_s`` and
+    ``url``.
 
 ``build(spark, config)`` returns the PipelinePlan — the lazy canonical
 DataFrames (events / profiles / merges) — which is the engine's IR: no
@@ -27,6 +41,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from tomixpanel_spark.session import ensure_semantics
 from tomixpanel_spark.sinks.http import (
+    MIXPANEL_ENGAGE_URL,
+    MIXPANEL_IMPORT_URL_US,
     HttpSink,
     HttpSinkConfig,
     mp_event_record,
@@ -34,9 +50,6 @@ from tomixpanel_spark.sinks.http import (
     mp_profile_record,
     summarize_receipts,
 )
-
-MIXPANEL_IMPORT_URL = "https://api.mixpanel.com/import"
-MIXPANEL_ENGAGE_URL = "https://api.mixpanel.com/engage"
 
 
 @dataclass
@@ -225,21 +238,18 @@ def run(
     dest = config.get("destination", {})
     dopts = dest.get("options", {})
     base = HttpSinkConfig(
-        url=dopts.get("import_url", MIXPANEL_IMPORT_URL),
+        url=dopts.get("import_url", MIXPANEL_IMPORT_URL_US),
         headers=dopts.get("headers", {}),
         max_records=dopts.get("recordsPerBatch", 2000),
         gzip=dopts.get("gzip", True),
         strict=dopts.get("strict", True),
         min_interval_s=dopts.get("min_interval_s", 0.0),
     )
-    save_copy = bool(dopts.get("save_local_copy"))
-    save_dir = dopts.get("save_dir")
-    if save_copy and not save_dir:
-        raise ValueError("destination.options.save_local_copy requires save_dir")
+    save_dir = _save_dir(dopts)
 
     def _load(name: str, df, sink: HttpSink) -> dict:
         return _checkpointed_send(
-            name, df, sink, save_copy, save_dir, concurrency,
+            name, df, sink, save_dir, concurrency,
             partition_events=(name == "events"),
         )
 
@@ -267,24 +277,32 @@ def run(
     return summary
 
 
+def _save_dir(dopts: dict) -> Optional[str]:
+    """The K9 checkpoint root when ``save_local_copy`` is on, else None."""
+    if not dopts.get("save_local_copy"):
+        return None
+    if not dopts.get("save_dir"):
+        raise ValueError("destination.options.save_local_copy requires save_dir")
+    return dopts["save_dir"]
+
+
 def _checkpointed_send(
     name: str,
     df: DataFrame,
     sink: HttpSink,
-    save_copy: bool,
     save_dir: Optional[str],
     concurrency: Optional[int],
     partition_events: bool = False,
 ) -> dict:
-    """K9 send wrapper shared by the forward and reverse load paths:
-    optionally checkpoint the outgoing stream as parquet and persist the
-    batch receipts as the response log / dead-letter store.
+    """K9 send wrapper shared by the forward and reverse load paths: with
+    a ``save_dir``, checkpoint the outgoing stream as parquet and persist
+    the batch receipts as the response log / dead-letter store.
 
     Checkpoint first, then SEND FROM THE CHECKPOINT: one computation of
     the transform lineage, and the saved copy is byte-identical to what
     was sent. ``partition_events`` gives the stream the date-partitioned
     lake layout so replays prune."""
-    if save_copy:
+    if save_dir:
         from tomixpanel_spark.sinks.lake import (
             write_events_partitioned,
             write_local_copy,
@@ -296,7 +314,7 @@ def _checkpointed_send(
             write_local_copy(df, f"{save_dir}/{name}")
         df = df.sparkSession.read.parquet(f"{save_dir}/{name}")
     receipts = sink.send(df, concurrency)
-    if save_copy:
+    if save_dir:
         # drive the send EXACTLY ONCE: persist receipts to disk, then
         # summarize from the re-read — a second action on the live
         # receipt stream could re-POST batches on cache eviction
@@ -352,10 +370,7 @@ def _run_reverse(
 
     # K9 applies to the reverse path too (the reference stages the export
     # file and keeps it under save_local_copy)
-    save_copy = bool(dopts.get("save_local_copy"))
-    save_dir = dopts.get("save_dir")
-    if save_copy and not save_dir:
-        raise ValueError("destination.options.save_local_copy requires save_dir")
+    save_dir = _save_dir(dopts)
 
     raw = _mixpanel_export_raw(spark, opts)
     do_people = bool(opts.get("doPeople") or opts.get("people"))
@@ -377,7 +392,7 @@ def _run_reverse(
         )
         summary["events"] = _checkpointed_send(
             "events", mp_to_amplitude_events(raw), ev_sink,
-            save_copy, save_dir, concurrency,
+            save_dir, concurrency,
         )
         if do_people:
             profiles = mp_engage_profiles(
@@ -391,7 +406,7 @@ def _run_reverse(
             )
             summary["users"] = _checkpointed_send(
                 "users", mp_to_amplitude_users(profiles), us_sink,
-                save_copy, save_dir, concurrency,
+                save_dir, concurrency,
             )
         return summary
 
@@ -407,7 +422,7 @@ def _run_reverse(
     )
     summary["events"] = _checkpointed_send(
         "events", mp_to_woopra_events(raw, project), sink,
-        save_copy, save_dir, concurrency,
+        save_dir, concurrency,
     )
     if do_people:
         summary["users"] = {"skipped": "woopra users unsupported upstream"}

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import gzip as _gzip
 import json
-from collections.abc import Iterable, Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 EVENTS_PER_BATCH = 2000
 BYTES_PER_BATCH = 2 * 1024 * 1024
@@ -67,8 +67,19 @@ def iter_batches(
         yield batch
 
 
-def batch_payload(batch: list[bytes], gzip: bool = True) -> bytes:
-    """JSON-array body, optionally gzipped (reference gzips every /import
-    batch, load/sendEventsToMixpanel.js:157-162)."""
-    body = b"[" + b",".join(batch) + b"]"
+def json_array(batch: list[bytes]) -> bytes:
+    """The default envelope: the serialized records as one JSON array."""
+    return b"[" + b",".join(batch) + b"]"
+
+
+def batch_payload(
+    batch: list[bytes],
+    gzip: bool = True,
+    envelope: Callable[[list[bytes]], bytes] = json_array,
+) -> bytes:
+    """The request body of one batch: ``envelope`` wraps the serialized
+    records (vendor shapes live in sinks/reverse.py), then the body is
+    optionally gzipped (reference gzips every /import batch,
+    load/sendEventsToMixpanel.js:157-162)."""
+    body = envelope(batch)
     return _gzip.compress(body) if gzip else body

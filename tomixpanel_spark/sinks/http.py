@@ -36,10 +36,14 @@ from tomixpanel_spark.sinks.batching import (
     EVENTS_PER_BATCH,
     batch_payload,
     iter_batches,
+    json_array,
 )
 
 # transport(url, body, headers, method) -> (status_code, response_text)
 Transport = Callable[[str, bytes, dict, str], tuple[int, str]]
+
+# statuses worth another attempt; any other non-200 reply is final
+RETRY_STATUSES = (429, 500, 502, 503, 504)
 
 RECEIPT_SCHEMA = (
     "partition_id int, batch_index int, n_records int, n_bytes int, "
@@ -65,20 +69,17 @@ def urllib_transport(
 class HttpSinkConfig:
     url: str
     method: str = "POST"
-    # envelope(batch: list[bytes]) -> request body; default JSON array.
-    # Vendor APIs wrap batches differently (Amplitude {api_key, events},
+    # envelope(batch: list[bytes]) -> request body before gzip. Vendor
+    # APIs wrap batches differently (Amplitude {api_key, events},
     # identify form-encoding, Woopra NDJSON) — see sinks/reverse.py.
-    envelope: Optional[Callable[[list], bytes]] = None
+    envelope: Callable[[list], bytes] = json_array
     headers: dict = field(default_factory=dict)
     max_records: int = EVENTS_PER_BATCH
-    max_bytes: int = BYTES_PER_BATCH
     gzip: bool = True
     strict: bool = True  # Mixpanel /import strict=1 (K4, :166)
     max_attempts: int = 4
     backoff_s: float = 0.5  # exponential: 0.5, 1, 2, ...
     min_interval_s: float = 0.0  # rate limit between batches per partition
-    retry_statuses: tuple = (429, 500, 502, 503, 504)
-    keep_failed_payload: bool = True
 
 
 class HttpSink:
@@ -145,15 +146,9 @@ class HttpSink:
             out = []
             last_send = 0.0
             for bi, batch in enumerate(
-                iter_batches(records(), cfg.max_records, cfg.max_bytes)
+                iter_batches(records(), cfg.max_records, BYTES_PER_BATCH)
             ):
-                if cfg.envelope is not None:
-                    import gzip as _g
-
-                    raw = cfg.envelope(batch)
-                    body = _g.compress(raw) if cfg.gzip else raw
-                else:
-                    body = batch_payload(batch, gzip=cfg.gzip)
+                body = batch_payload(batch, cfg.gzip, cfg.envelope)
                 wait = cfg.min_interval_s - (time.monotonic() - last_send)
                 if wait > 0:
                     time.sleep(wait)
@@ -166,7 +161,7 @@ class HttpSink:
                         status, text = -1, repr(e)
                     if status == 200:
                         break
-                    if status not in cfg.retry_statuses and status != -1:
+                    if status not in RETRY_STATUSES and status != -1:
                         break
                     if attempt < cfg.max_attempts - 1:  # no sleep after last try
                         time.sleep(cfg.backoff_s * (2**attempt))
@@ -182,9 +177,7 @@ class HttpSink:
                         "ok": ok,
                         "attempts": attempts,
                         "error": None if ok else text[:2000],
-                        "payload": None
-                        if ok or not cfg.keep_failed_payload
-                        else (b"[" + b",".join(batch) + b"]").decode("utf-8"),
+                        "payload": None if ok else json_array(batch).decode("utf-8"),
                     }
                 )
             yield pd.DataFrame(
@@ -225,6 +218,7 @@ def dead_letters(receipts: DataFrame) -> DataFrame:
 
 MIXPANEL_IMPORT_URL_US = "https://api.mixpanel.com/import"
 MIXPANEL_IMPORT_URL_EU = "https://api-eu.mixpanel.com/import"
+MIXPANEL_ENGAGE_URL = "https://api.mixpanel.com/engage"
 
 
 def mixpanel_import_sink(

@@ -15,10 +15,7 @@ dead-letters; only the wire shape, chunk sizes, and pacing differ.
 
 from __future__ import annotations
 
-import json
 from typing import Optional
-
-from pyspark.sql import DataFrame
 
 from tomixpanel_spark.sinks.http import HttpSink, HttpSinkConfig, Transport
 
@@ -157,21 +154,3 @@ def woopra_sink(
     )
     return HttpSink(cfg, woopra_record, transport)
 
-
-def send_reverse_amplitude(
-    events: DataFrame,
-    users: DataFrame,
-    api_key: str,
-    transport: Optional[Transport] = None,
-    concurrency: Optional[int] = None,
-) -> dict:
-    """Events then users, mirroring the reference's send order
-    (load/sendOther.js:144-258). Returns receipt summaries."""
-    from tomixpanel_spark.sinks.http import summarize_receipts
-
-    ev_sink = amplitude_events_sink(api_key, transport=transport)
-    us_sink = amplitude_users_sink(api_key, transport=transport)
-    return {
-        "events": summarize_receipts(ev_sink.send(events, concurrency)),
-        "users": summarize_receipts(us_sink.send(users, concurrency)),
-    }

@@ -31,6 +31,8 @@ EXPORT_URL = "https://amplitude.com/api/2/export"
 # http(url, headers) -> bytes (zip archive)
 HttpGet = Callable[[str, dict], bytes]
 
+FETCH_PARALLELISM = 5  # concurrent slice fetches (reference ampReplicator.js:27)
+
 
 @dataclass
 class AmplitudeSource:
@@ -40,7 +42,6 @@ class AmplitudeSource:
     end: str
     staging_dir: str
     http: Optional[HttpGet] = None
-    fetch_parallelism: int = 5  # reference ampReplicator.js:27
 
     def _auth_header(self) -> dict:
         import base64
@@ -94,7 +95,7 @@ class AmplitudeSource:
         from concurrent.futures import ThreadPoolExecutor
 
         paths: list[str] = []
-        with ThreadPoolExecutor(max_workers=self.fetch_parallelism) as pool:
+        with ThreadPoolExecutor(max_workers=FETCH_PARALLELISM) as pool:
             for got in pool.map(fetch_one, self.hour_slices()):
                 paths.extend(got)
         return paths

@@ -11,6 +11,8 @@ from __future__ import annotations
 
 import hashlib
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -56,29 +58,40 @@ def read_csv_all_strings(
 def _stage_events_csv(sf_dir: str) -> str:
     """Deterministically materialize a CSV copy of the events table (string
     columns only) so the scan operator has a genuine CSV input while the
-    oracle runs against the parquet view."""
+    oracle runs against the parquet view.
+
+    The copy is staged under the process temp dir and published by one
+    atomic rename of a private directory, so a reader never sees a
+    half-written file; the directory's existence marks a finished copy. A
+    caller whose rename loses the race discards its own copy."""
     import duckdb
 
     key = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    out = f"/tmp/tomixpanel_stage/events_csv_{key}"
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
-        os.makedirs(out, exist_ok=True)
+    root = os.path.join(tempfile.gettempdir(), "tomixpanel_stage")
+    out = os.path.join(root, f"events_csv_{key}")
+    if not os.path.isdir(out):
+        os.makedirs(root, exist_ok=True)
+        private = tempfile.mkdtemp(prefix=".events_csv_", dir=root)
         con = duckdb.connect()
-        con.execute(
-            f"""
-            COPY (
-              SELECT CAST(event_id AS VARCHAR) AS event_id,
-                     CAST(user_id AS VARCHAR) AS user_id,
-                     event_type
-              FROM '{sf_dir}/events.parquet'
-              ORDER BY event_id
-            ) TO '{out}/events.csv' (HEADER, DELIMITER ',')
-            """
-        )
-        con.close()
-        open(marker, "w").close()
-    return f"{out}/events.csv"
+        try:
+            con.execute(
+                f"""
+                COPY (
+                  SELECT CAST(event_id AS VARCHAR) AS event_id,
+                         CAST(user_id AS VARCHAR) AS user_id,
+                         event_type
+                  FROM '{sf_dir}/events.parquet'
+                  ORDER BY event_id
+                ) TO '{private}/events.csv' (HEADER, DELIMITER ',')
+                """
+            )
+        finally:
+            con.close()
+        try:
+            os.rename(private, out)
+        except OSError:  # another caller published first
+            shutil.rmtree(private, ignore_errors=True)
+    return os.path.join(out, "events.csv")
 
 
 def csv_scan(spark: SparkSession, sf_dir: str) -> DataFrame:

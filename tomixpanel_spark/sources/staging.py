@@ -112,27 +112,6 @@ def valid_records(df: DataFrame) -> DataFrame:
     return _drop_meta(df.filter(F.col(CORRUPT_COL).isNull()))
 
 
-def valid_records_file_skip(df: DataFrame, max_corrupt_per_file: int = 0) -> DataFrame:
-    """V1 whole-file skip fidelity: the reference validates each GA export
-    file against its draft-04 schema and skips the ENTIRE file on any
-    error (transform/gaToMixpanel.js:51-57). Corrupt counts group by the
-    provenance column stamped at scan time; offending files anti-join out
-    via a broadcast of the (tiny) bad-file list. ``max_corrupt_per_file``
-    generalizes the reference's 0-tolerance contract."""
-    if SRC_FILE_COL not in df.columns:
-        raise ValueError("file-skip gate needs the read_json_auto provenance column")
-    bad = (
-        df.groupBy(SRC_FILE_COL)
-        .agg(
-            F.sum(F.col(CORRUPT_COL).isNotNull().cast("int")).alias("n_corrupt")
-        )
-        .filter(F.col("n_corrupt") > max_corrupt_per_file)
-        .select(SRC_FILE_COL)
-    )
-    kept = df.join(F.broadcast(bad), SRC_FILE_COL, "left_anti")
-    return _drop_meta(kept.filter(F.col(CORRUPT_COL).isNull()))
-
-
 def corrupt_records(df: DataFrame) -> DataFrame:
     """The V2 salvage gate as a DataFrame instead of a skipped line."""
     cols = [CORRUPT_COL] + ([SRC_FILE_COL] if SRC_FILE_COL in df.columns else [])

@@ -34,8 +34,16 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from tomixpanel_spark.functions.canonical import canonical_insert_id
+from tomixpanel_spark.functions.maps import (
+    _empty_map,
+    _entry_array,
+    _keep_truthy,
+    _opt_entries,
+    _truthy,
+)
 
 SOURCE_TAG = "amplitudeToMixpanel (by AK)"
+FALSY = ("",)  # JS-falsy strings (functions/maps.py)
 
 # reference transform/amplitudeToMixpanel.js:73-83 (os_name maps to BOTH
 # $os and $browser — duplicate source key is intentional).
@@ -73,34 +81,6 @@ _LEFTOVER_SCALARS = (
 )
 
 
-def _truthy(c: Column) -> Column:
-    """JS truthiness for string fields: present and non-empty."""
-    return c.isNotNull() & (c.cast("string") != "")
-
-
-def _entry(k: str, v: Column) -> Column:
-    return F.struct(F.lit(k).alias("key"), v.cast("string").alias("value"))
-
-
-def _entry_array(pairs: list[tuple[str, Column]]) -> Column:
-    return F.array(*[_entry(k, v) for k, v in pairs])
-
-
-def _keep_truthy(entries: Column) -> Column:
-    """One filter pass implements the reference's `if (src) props[dst] =
-    src` loops: the value is already stringified in the entry struct, so
-    truthiness is a single null/empty check per entry rather than a
-    per-pair when(cast, cast) tower (the round-3 bench finding)."""
-    return F.filter(
-        entries, lambda e: e["value"].isNotNull() & (e["value"] != "")
-    )
-
-
-def _opt_entries(pairs: list[tuple[str, Column]]) -> Column:
-    """Build MAP<STRING,STRING> keeping only truthy values."""
-    return F.map_from_entries(_keep_truthy(_entry_array(pairs)))
-
-
 def _distinct_id() -> Column:
     """user_id || device_id || amplitude_id.toString() with JS falsiness
     ('' skipped) — reference :93,121-124."""
@@ -113,11 +93,7 @@ def _distinct_id() -> Column:
 
 @lru_cache(maxsize=1)
 def _pair_map() -> Column:
-    return _opt_entries([(dst, F.col(src)) for src, dst in AMP_MIX_PAIRS])
-
-
-def _empty_map() -> Column:
-    return F.create_map().cast("map<string,string>")
+    return _opt_entries([(dst, F.col(src)) for src, dst in AMP_MIX_PAIRS], FALSY)
 
 
 def _nonnull_map(name: str) -> Column:
@@ -154,10 +130,11 @@ def _amp_event_columns() -> tuple:
                 ("mp_country_code", F.col("country")),
                 ("$source", F.lit(SOURCE_TAG)),
             ]
-        )
+        ),
+        FALSY,
     )
     leftover = _keep_truthy(
-        _entry_array([(k, F.col(f"`{k}`")) for k in _LEFTOVER_SCALARS])
+        _entry_array([(k, F.col(f"`{k}`")) for k in _LEFTOVER_SCALARS]), FALSY
     )
     # ONE map build: entry arrays concatenate in spread order (later keys
     # win under LAST_WIN — identical precedence to the map_concat tower
@@ -169,7 +146,9 @@ def _amp_event_columns() -> tuple:
             F.map_entries(_nonnull_map("groups")),
             F.map_entries(_nonnull_map("user_properties")),
             reserved,
-            _keep_truthy(_entry_array([(dst, F.col(src)) for src, dst in AMP_MIX_PAIRS])),
+            _keep_truthy(
+                _entry_array([(dst, F.col(src)) for src, dst in AMP_MIX_PAIRS]), FALSY
+            ),
         )
     )
     insert_id = F.coalesce(
@@ -206,7 +185,7 @@ def amp_merges(df: DataFrame, run_time_ms: int = 0) -> DataFrame:
     (global.nowTime, index.js:22) — ``run_time_ms`` is the deterministic
     replacement, supplied by the pipeline run.
     """
-    both = _truthy(F.col("user_id")) & _truthy(F.col("device_id"))
+    both = _truthy(F.col("user_id"), FALSY) & _truthy(F.col("device_id"), FALSY)
     edge = df.filter(both).select(
         F.col("user_id").alias("id_a"), F.col("device_id").alias("id_b")
     )

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from tomixpanel_spark.functions.canonical import canonical_insert_id, normalize_time_ms
+from tomixpanel_spark.functions.maps import _empty_map
 
 SOURCE_TAG = "csvToMixpanel (by AK)"
 
@@ -69,7 +70,7 @@ def csv_events(df: DataFrame, m: CsvMapping) -> DataFrame:
             F.array(*[F.col(f"`{c}`") for c in passthrough]),
         )
         if passthrough
-        else F.create_map().cast("map<string,string>"),
+        else _empty_map(),
         F.map_from_arrays(
             F.array(*[k for k, _ in tag_entries]),
             F.array(*[v for _, v in tag_entries]),
@@ -114,7 +115,7 @@ def csv_profiles(df: DataFrame, m: CsvMapping) -> DataFrame:
             F.array(*[F.col(f"`{c}`") for c in prop_cols]),
         )
         if prop_cols
-        else F.create_map().cast("map<string,string>")
+        else _empty_map()
     )
     return first.select(
         F.lit(m.token).cast("string").alias("token"),

@@ -35,8 +35,17 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from tomixpanel_spark.functions.canonical import canonical_insert_id
+from tomixpanel_spark.functions.maps import (
+    _empty_map,
+    _entry,
+    _entry_array,
+    _keep_truthy,
+    _truthy,
+)
 
 SOURCE_TAG = "ga360toMixpanel (by AK)"
+# JS-falsy strings (functions/maps.py); GA booleans arrive as strings
+FALSY = ("", "false")
 
 # reference gaToMixpanel.js:308-320
 GA_DEVICE_PAIRS = (
@@ -78,33 +87,6 @@ GA_ATTRIBUTION_PAIRS = (
 FOUR_DAYS_MS = 345_600 * 1000  # reference gaToMixpanel.js:294
 
 
-def _truthy(c: Column) -> Column:
-    return c.isNotNull() & (c.cast("string") != "") & (c.cast("string") != "false")
-
-
-def _entry(k: str, v: Column) -> Column:
-    return F.struct(F.lit(k).alias("key"), v.cast("string").alias("value"))
-
-
-def _entry_array(pairs: list[tuple[str, Column]]) -> Column:
-    return F.array(*[_entry(k, v) for k, v in pairs])
-
-
-def _keep_truthy(entries: Column) -> Column:
-    """One filter pass drops JS-falsy values (the reference's truthy gate)
-    — the value is already stringified in the entry struct, so the check
-    costs one comparison chain per entry instead of the per-pair
-    when(cast, cast) tower the round-3 bench flagged."""
-    return F.filter(
-        entries,
-        lambda e: e["value"].isNotNull() & (e["value"] != "") & (e["value"] != "false"),
-    )
-
-
-def _opt_entries(pairs: list[tuple[str, Column]]) -> Column:
-    return F.map_from_entries(_keep_truthy(_entry_array(pairs)))
-
-
 def _uuid() -> Column:
     """userId || fullVisitorId || visitorId || client_id || visitId || ''
     (reference :111,135)."""
@@ -129,7 +111,7 @@ def _default_entries() -> Column:
         + [(dst, F.col(f"trafficSource.{src}")) for src, dst in GA_ATTRIBUTION_PAIRS]
         + [("UTM Channel", F.col("channelGrouping"))]
     )
-    return _keep_truthy(_entry_array(pairs))
+    return _keep_truthy(_entry_array(pairs), FALSY)
 
 
 def _default_props() -> Column:
@@ -161,7 +143,8 @@ def _boundary_props() -> Column:
     return F.map_from_entries(
         F.concat(
             _keep_truthy(
-                _entry_array([("summary", F.col("summary")), ("$source", F.lit(SOURCE_TAG))])
+                _entry_array([("summary", F.col("summary")), ("$source", F.lit(SOURCE_TAG))]),
+                FALSY,
             ),
             F.col("defaults"),
         )
@@ -266,7 +249,7 @@ def _hit_event_struct(hit: Column) -> Column:
 
     def flat(field: str) -> Column:
         return F.map_entries(
-            F.coalesce(hit[field], F.create_map().cast("map<string,string>"))
+            F.coalesce(hit[field], _empty_map())
         )
 
     # ONE map build per hit: entry arrays concatenate in the reference's
@@ -284,7 +267,8 @@ def _hit_event_struct(hit: Column) -> Column:
                 ("products", F.to_json(hit["product"])),
                 ("promotions", F.to_json(hit["promotion"])),
             ]
-        )
+        ),
+        FALSY,
     )
     opt_page_event = _keep_truthy(
         _entry_array(
@@ -296,7 +280,8 @@ def _hit_event_struct(hit: Column) -> Column:
                 ("eventAction", hit["eventInfo"]["eventAction"]),
                 ("eventLabel", hit["eventInfo"]["eventLabel"]),
             ]
-        )
+        ),
+        FALSY,
     )
     props = F.map_from_entries(
         F.concat(
@@ -376,28 +361,10 @@ def ga_events(
     df: DataFrame,
     move_to_present: bool = False,
     anchor_now_ms: int | None = None,
-    materialize_base: bool = False,
 ) -> DataFrame:
     """Sessions -> full event stream (begins + hits + ends), $insert_id on
-    every row; optional move-to-present shift.
-
-    ``materialize_base``: the session prep (identity, default-prop
-    entries, summary) feeds THREE consumers (begins / hits / ends), and
-    Spark has no cross-branch common-subexpression reuse — each branch
-    re-evaluates the prep against the source. Materializing it once
-    (localCheckpoint) trades one write of the prepped sessions (including
-    the full nested hits array) for two re-computations. Default OFF:
-    after the single-pass entry-array rewrite the prep is cheap enough
-    that re-evaluation beats serializing the nested sessions (A/B at
-    sf0.1: 1.43 s unmaterialized vs 1.62 s checkpointed); turn on when
-    the upstream source is expensive to rescan (e.g. remote JSON).
-    """
-    base = _session_base(df)
-    if materialize_base:
-        from tomixpanel_spark.operators.base import stage_checkpoint
-
-        base = stage_checkpoint(base, eager=True)
-    events = base.select(*_exploded_event_columns()).select(*_event_final_columns())
+    every row; optional move-to-present shift."""
+    events = _session_base(df).select(*_exploded_event_columns()).select(*_event_final_columns())
     if move_to_present:
         if anchor_now_ms is None:
             raise ValueError("anchor_now_ms required for deterministic move_to_present")
@@ -416,7 +383,7 @@ def ga_profiles(df: DataFrame, token: str | None = None) -> DataFrame:
     defaults = _default_props()
     lat = F.col("geoNetwork.latitude")
     lng = F.col("geoNetwork.longitude")
-    both = _truthy(lat) & _truthy(lng)
+    both = _truthy(lat, FALSY) & _truthy(lng, FALSY)
     return df.select(
         F.lit(token).cast("string").alias("token"),
         _uuid().alias("distinct_id"),
