@@ -43,3 +43,35 @@ def test_loc_counts_code_lines_only(tmp_path):
     )
     # import, class, x = ..., def, return (y +, 1)
     assert json.loads(out.stdout) == {"files": 1, "code_lines": 6}
+
+
+def test_loc_counts_a_git_revision(tmp_path):
+    """--rev reads the paths from a commit instead of the working tree:
+    a two-commit repo counts each commit's code lines, and uncommitted
+    edits do not count."""
+    def git(*args):
+        subprocess.run(
+            ["git", "-c", "user.name=t", "-c", "user.email=t@t", *args],
+            cwd=tmp_path, check=True, capture_output=True,
+        )
+
+    def loc(*args):
+        out = subprocess.run(
+            [sys.executable, str(REPO / "tools" / "loc.py"), "pkg", *args],
+            cwd=tmp_path, capture_output=True, text=True, check=True,
+        )
+        return json.loads(out.stdout)
+
+    pkg = tmp_path / "pkg"
+    pkg.mkdir()
+    git("init", "-q")
+    (pkg / "m.py").write_text(SOURCE)
+    git("add", "-A")
+    git("commit", "-q", "-m", "first")
+    (pkg / "n.py").write_text("a = 1\nb = 2\n")
+    git("add", "-A")
+    git("commit", "-q", "-m", "second")
+    (pkg / "n.py").write_text("a = 1\n")  # uncommitted
+    assert loc("--rev", "HEAD~1") == {"files": 1, "code_lines": 6}
+    assert loc("--rev", "HEAD") == {"files": 2, "code_lines": 8}
+    assert loc() == {"files": 2, "code_lines": 7}

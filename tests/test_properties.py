@@ -588,6 +588,50 @@ class TestTokenizeSpec:
         assert Counter(_fold_tokenize("a\xa0b c")) != Counter(["a", "b", "c"])
 
 
+def png_bomb() -> bytes:
+    """A 64 KB PNG that declares 8x8 pixels but whose IDAT inflates to
+    64 MB of zeros (built 1 MB at a time)."""
+    import struct
+    import zlib
+
+    from tomixpanel_spark.operators.multimodal import _png_chunk
+
+    z = zlib.compressobj(9)
+    idat = b"".join(z.compress(bytes(1 << 20)) for _ in range(64)) + z.flush()
+    return (
+        b"\x89PNG\r\n\x1a\n"
+        + _png_chunk(b"IHDR", struct.pack(">IIBBBBB", 8, 8, 8, 0, 0, 0, 0))
+        + _png_chunk(b"IDAT", idat)
+        + _png_chunk(b"IEND", b"")
+    )
+
+
+def oversized_baseline_sof() -> bytes:
+    """An 8x8 baseline JPEG whose SOF claims 65528x65528 pixels."""
+    import struct
+
+    import numpy as np
+
+    from tomixpanel_spark.operators.multimodal import encode_jpeg_gray
+
+    payload = bytearray(encode_jpeg_gray(np.full((8, 8), 77, dtype=np.uint8), 90))
+    sof = payload.find(b"\xff\xc0")
+    payload[sof + 5 : sof + 9] = struct.pack(">HH", 0xFFF8, 0xFFF8)
+    return bytes(payload)
+
+
+def oversized_progressive_sof() -> bytes:
+    """A few-hundred-byte progressive JPEG whose SOF claims 8192x8192."""
+    T = TestJpegCodec
+    return (
+        b"\xff\xd8" + T._dqt_flat16() + T._sof2_gray(8192, 8192)
+        + T._dht_annexk()
+        + T._sos_prog([(1, 0x00)], 0, 0, 0, 0)
+        + T._entropy("00")
+        + b"\xff\xd9"
+    )
+
+
 class TestPngCodec:
     @given(st.integers(1, 16), st.integers(1, 16), st.integers(0, 2**32 - 1))
     @settings(max_examples=60, deadline=None)
@@ -658,6 +702,39 @@ class TestPngCodec:
         )
         out = decode_png_gray(payload)
         assert (out == px.astype(np.uint8)).all()
+
+    def test_png_bomb_rejected_without_inflating(self):
+        """IDAT is inflated at most one byte past what IHDR declares: a
+        stream that inflates to 64 MB for an 8x8 image raises the
+        wrong-length error with a traced peak far below the 64 MB."""
+        import tracemalloc
+
+        from tomixpanel_spark.operators.multimodal import decode_png_gray
+
+        bomb = png_bomb()
+        tracemalloc.start()
+        try:
+            with pytest.raises(ValueError, match="wrong length"):
+                decode_png_gray(bomb)
+            peak = tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+        assert peak < 8 << 20, peak
+
+    def test_png_respects_pixel_cap(self, monkeypatch):
+        """TOMIX_IMG_MAX_PIXELS bounds PNG as it bounds JPEG: checked at
+        IHDR, before the inflate."""
+        import numpy as np
+
+        from tomixpanel_spark.operators.multimodal import (
+            decode_png_gray,
+            encode_png_gray,
+        )
+
+        payload = encode_png_gray(np.zeros((512, 512), dtype=np.uint8))
+        monkeypatch.setenv("TOMIX_IMG_MAX_PIXELS", "65536")
+        with pytest.raises(ValueError, match="TOMIX_IMG_MAX_PIXELS"):
+            decode_png_gray(payload)
 
     def test_dhash_matches_oracle_bit_layout(self):
         """dhash_bits' bit order must equal the SQL's CASE-term layout:
@@ -1451,6 +1528,27 @@ class TestJpegCodec:
         with pytest.raises(ValueError, match="CMYK|3-component|1-component"):
             decode_jpeg_gray(cmyk)
 
+    def test_subsampled_grayscale_baseline_decodes(self):
+        """T.81 A.2.2 codes any single-component scan in block raster
+        order, whatever its sampling factors: a grayscale baseline SOF
+        declaring 2x2 sampling decodes to the pixels of its 1x1 twin."""
+        import numpy as np
+
+        from tomixpanel_spark.operators.multimodal import (
+            decode_jpeg_gray,
+            encode_jpeg_gray,
+        )
+
+        img = np.random.default_rng(29).integers(0, 256, (20, 28), dtype=np.uint8)
+        payload = encode_jpeg_gray(img, 90)
+        sof = payload.find(b"\xff\xc0")
+        assert payload[sof + 11] == 0x11  # component 1's sampling byte
+        patched = payload[: sof + 11] + b"\x22" + payload[sof + 12 :]
+        want = decode_jpeg_gray(payload)
+        got = decode_jpeg_gray(patched)
+        assert got.shape == want.shape == (20, 28)
+        assert (got == want).all()
+
     def test_restart_interval_roundtrip(self):
         """DRI/RSTn streams (T.81 E.2.4): the restart-interval encoding
         of an image must decode to EXACTLY the pixels of the plain
@@ -1945,6 +2043,72 @@ class TestImageDecoderExceptionHygiene:
         )
         decode_jpeg_gray(valid)  # the seed stream itself must decode
         self._fuzz(valid, decode_jpeg_gray, b"\xff\xd8")
+
+    def test_color_420_restart_jpeg_fuzz_only_valueerror(self):
+        """Fuzz over an interleaved 4:2:0 colour stream with a restart
+        interval: the MCU walk, the chroma scratch block and the RST
+        handling see corrupt input too."""
+        from tomixpanel_spark.operators.multimodal import decode_jpeg_gray
+
+        T = TestJpegCodec
+        mcu = (
+            "100" "110" "1010" "011" "10" "1010"   # Y: dc 6, 8
+            "011" "01" "1010" "100" "001" "1010"   # Y: dc 6, 0
+            "00" "1010" "00" "1010"                # Cb, Cr
+        )
+        valid = (
+            b"\xff\xd8" + T._dqt_flat16() + T._sof0_ycbcr(16, 32, 0x22)
+            + T._dht_annexk() + T._seg(0xDD, (1).to_bytes(2, "big"))
+            + T._sos_3comp()
+            + T._entropy(mcu) + b"\xff\xd0" + T._entropy(mcu)
+            + b"\xff\xd9"
+        )
+        got = decode_jpeg_gray(valid)  # the seed stream itself must decode
+        assert (got[:8, :8] == 140).all() and (got[8:, 24:] == 128).all()
+        self._fuzz(valid, decode_jpeg_gray, b"\xff\xd8")
+
+    def test_noninterleaved_jpeg_fuzz_only_valueerror(self):
+        """Fuzz over the three-scan non-interleaved stream: the raster
+        walk and the skipped chroma scans see corrupt input too."""
+        from tomixpanel_spark.operators.multimodal import decode_jpeg_gray
+
+        T = TestJpegCodec
+
+        def sos1(cid):
+            return T._seg(0xDA, bytes([1, cid, 0x00, 0, 63, 0]))
+
+        valid = (
+            b"\xff\xd8" + T._dqt_flat16() + T._sof0_ycbcr(8, 8, 0x11)
+            + T._dht_annexk()
+            + sos1(1) + T._entropy("100" "110" "1010")
+            + sos1(2) + T._entropy("00" "1010")
+            + sos1(3) + T._entropy("00" "1010")
+            + b"\xff\xd9"
+        )
+        assert (decode_jpeg_gray(valid) == 140).all()
+        self._fuzz(valid, decode_jpeg_gray, b"\xff\xd8")
+
+    @pytest.mark.parametrize(
+        "build",
+        [oversized_baseline_sof, oversized_progressive_sof, png_bomb],
+        ids=["baseline-sof", "progressive-sof", "png-bomb"],
+    )
+    def test_crafted_payload_raises_within_memory(self, build):
+        """Crafted payloads that claim huge images raise ValueError with
+        a small traced peak: every bound is checked before allocating."""
+        import tracemalloc
+
+        from tomixpanel_spark.operators.multimodal import decode_image_gray
+
+        payload = build()
+        tracemalloc.start()
+        try:
+            with pytest.raises(ValueError):
+                decode_image_gray(payload)
+            peak = tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+        assert peak < 16 << 20, peak
 
     def test_png_fuzz_only_valueerror(self):
         import numpy as np

@@ -513,6 +513,41 @@ class TestPipeline:
         ]
         assert all("$source" in e["properties"] for e in payload_events)
 
+    @pytest.mark.parametrize("source", ["csv", "ga"])
+    def test_run_releases_its_cached_source_read(self, spark, tmp_path, stub, source):
+        """build() caches the staged source read so the sniff and every
+        stream share one parse; run() unpersists it once the summaries
+        are in, so a run over a fresh input leaves no persistent RDD."""
+        from tests.fixtures import ga_session_rows
+        from tomixpanel_spark import pipeline
+
+        if source == "csv":
+            path = tmp_path / "in.csv"
+            path.write_text(csv_text())
+            options = {
+                "path": str(path),
+                "event_name_col": "action",
+                "distinct_id_col": "guid",
+                "time_col": "time",
+            }
+        else:
+            path = tmp_path / "ga.json"
+            path.write_text("\n".join(json.dumps(r) for r in ga_session_rows()) + "\n")
+            options = {"path_to_data": str(path)}
+        config = {
+            "source": {"name": source, "options": options},
+            "destination": {
+                "name": "mixpanel",
+                "token": "tok",
+                "options": {"import_url": stub.url, "engage_url": stub.url},
+            },
+        }
+        persistent = spark.sparkContext._jsc.getPersistentRDDs
+        before = persistent().size()
+        summary = pipeline.run(spark, config)
+        assert summary["events"]["imported"] > 0
+        assert persistent().size() == before
+
     def test_amplitude_end_to_end_via_config(self, spark, tmp_path, stub):
         import io
         import zipfile as zf

@@ -60,7 +60,7 @@ KNOBS: dict[str, Knob] = {
     "TOMIX_CACHE_DERIVED": Knob(False, "cache derived artifacts across queries"),
     # -- environment plumbing --
     "TOMIX_CHECKPOINT_DIR": Knob(None, "reliable checkpoint() root; unset: localCheckpoint"),
-    "TOMIX_IMG_MAX_PIXELS": Knob(1 << 26, "JPEG decode pixel cap"),
+    "TOMIX_IMG_MAX_PIXELS": Knob(1 << 26, "PNG and JPEG decode pixel cap"),
     "TOMIX_JPEG_PROG_ALLOC_FLOOR_MB": Knob(16, "progressive-JPEG allocation floor"),
     "TOMIX_STREAM_SCRATCH": Knob(None, "streaming parity scratch root; unset: /dev/shm if roomy"),
 }

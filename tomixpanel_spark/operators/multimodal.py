@@ -8,16 +8,15 @@ JVM<->Python boundary in columnar batches, never row-at-a-time. The default
 (fmt/data chunk), and MP3 (frame header, ID3v2-aware) headers with stdlib
 ``struct``. PIXEL/PCM decode is also real where the format permits a
 stdlib implementation: 8-bit grayscale PNG (zlib + all five scanline
-filters), baseline JPEG — grayscale AND interleaved YCbCr color
-(any 4:4:4/4:2:2/4:2:0 sampling; the decoder returns the LUMA plane,
-which is all perceptual hashing needs — chroma blocks are
-Huffman-decoded to keep bitstream sync but never IDCT'd) — and
-WAV PCM16 — each with spec/golden-vector tests. Progressive (SOF2)
-JPEG decodes too (multi-scan coefficient accumulation, Annex G — most
-web-era JPEGs are progressive); CMYK/lossless/arithmetic JPEG and
-compressed-audio variants raise with an injected-decoder seam (none in
-this environment). The Spark-side plumbing (schema, batch shape, UDF
-signature, partitioning) is real and tested either way.
+filters), JPEG — baseline and progressive, grayscale or YCbCr at any
+sampling, interleaved or one component per scan, all through one decode
+path that returns the LUMA plane (all perceptual hashing needs) — and
+WAV PCM16 — each with spec/golden-vector tests. Decodes are bounded
+before they allocate (``TOMIX_IMG_MAX_PIXELS`` for both image formats).
+CMYK/lossless/arithmetic JPEG and compressed-audio variants raise with
+an injected-decoder seam (none in this environment). The Spark-side
+plumbing (schema, batch shape, UDF signature, partitioning) is real and
+tested either way.
 
 ``multimodal_meta`` doubles as the oracle-checked query: metadata extraction
 (byte length, sha256 content hash, magic-byte format sniff) over payloads —
@@ -27,7 +26,8 @@ computed in pandas batches, hash-identical to the DuckDB SQL mirror.
 from __future__ import annotations
 
 from collections.abc import Iterator
-from typing import Callable, Optional
+from functools import cache
+from typing import Callable, NamedTuple, Optional
 
 import pandas as pd
 
@@ -171,40 +171,64 @@ _JPEG_SOF_MARKERS = frozenset(
 )
 
 
-def _decode_jpeg_header(payload: bytes) -> dict:
-    import struct
-
-    if len(payload) < 4 or payload[:3] != b"\xff\xd8\xff":
+def _jpeg_segments(payload: bytes):
+    """Walk a JPEG stream's marker segments (T.81 B.1.1) from SOI to EOI,
+    yielding ``(marker, body, data)``: ``body`` is the segment after its
+    length field, ``data`` the entropy-coded bytes that follow an SOS
+    (RSTm markers included; empty after any other segment). Fill bytes
+    and standalone markers are skipped. The header parse, the EXIF
+    lookup and the pixel decoder all read the stream through this walk."""
+    if payload[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG: bad SOI signature")
     pos = 2
     while pos + 4 <= len(payload):
         if payload[pos] != 0xFF:
             raise ValueError("not a JPEG: lost marker sync")
         marker = payload[pos + 1]
-        if marker == 0xFF:  # fill bytes before a marker are legal
+        if marker == 0xFF:  # fill bytes before a marker (T.81 B.1.1.2)
             pos += 1
             continue
-        if marker in (0x01,) or 0xD0 <= marker <= 0xD8:  # standalone markers
+        if marker == 0xD9:  # EOI
+            return
+        if marker == 0x01 or 0xD0 <= marker <= 0xD8:  # standalone markers
             pos += 2
             continue
-        (seg_len,) = struct.unpack(">H", payload[pos + 2 : pos + 4])
+        end = pos + 2 + int.from_bytes(payload[pos + 2 : pos + 4], "big")
+        body = payload[pos + 4 : end]
+        pos = _entropy_end(payload, end) if marker == 0xDA else end
+        yield marker, body, payload[end:pos]
+
+
+def _entropy_end(payload: bytes, start: int) -> int:
+    """Position of the marker that ends a scan's entropy data: the first
+    0xFF at or after ``start`` that is neither stuffing (0xFF00) nor an
+    RSTm, else the end of the payload."""
+    i = payload.find(b"\xff", start)
+    while 0 <= i < len(payload) - 1:
+        nxt = payload[i + 1]
+        if nxt != 0x00 and not 0xD0 <= nxt <= 0xD7:
+            return i
+        i = payload.find(b"\xff", i + 2)
+    return len(payload)
+
+
+def _decode_jpeg_header(payload: bytes) -> dict:
+    import struct
+
+    for marker, body, _ in _jpeg_segments(payload):
+        if marker == 0xDA or (marker in _JPEG_SOF_MARKERS and len(body) < 5):
+            break
         if marker in _JPEG_SOF_MARKERS:
-            if pos + 9 > len(payload):
-                break
-            precision = payload[pos + 4]
-            height, width = struct.unpack(">HH", payload[pos + 5 : pos + 9])
-            components = payload[pos + 9] if pos + 9 < len(payload) else 0
+            precision = body[0]
+            height, width = struct.unpack(">HH", body[1:5])
             return {
                 "width": width,
                 "height": height,
                 "bit_depth": precision,
-                "color_type": components,  # 1=gray, 3=YCbCr
+                "color_type": body[5] if len(body) > 5 else 0,  # 1=gray, 3=YCbCr
                 "n_frames": 1,
                 "features": [float(width), float(height), float(precision)],
             }
-        if marker == 0xD9 or marker == 0xDA:  # EOI / SOS: no SOF seen first
-            break
-        pos += 2 + seg_len
     raise ValueError("not a JPEG: no SOF marker before SOS/EOI")
 
 
@@ -428,13 +452,27 @@ def encode_png_gray(pixels) -> bytes:
     )
 
 
+def _check_pixel_cap(fmt: str, h: int, w: int, n_px: int) -> None:
+    """The one TOMIX_IMG_MAX_PIXELS check, shared by the PNG and JPEG
+    decoders: image dimensions are untrusted input, so a decode whose
+    planes would exceed the cap raises ValueError before allocating
+    instead of OOM-killing the worker."""
+    max_px = knob("TOMIX_IMG_MAX_PIXELS")
+    if n_px > max_px:
+        raise ValueError(
+            f"{fmt} dimensions {h}x{w} exceed TOMIX_IMG_MAX_PIXELS={max_px}"
+        )
+
+
 def decode_png_gray(payload: bytes):
     """Decode an 8-bit grayscale PNG back to an (h, w) uint8 array —
     REAL decode: chunk walk, zlib inflate, and full scanline unfiltering
     (None/Sub/Up/Average/Paeth), not just the IHDR header parse of
     ``decode_payload``. Raises ValueError on anything that is not an
     8-bit grayscale PNG (inject a codec-backed decoder for color /
-    interlaced variants — out of scope for the sandbox) AND on
+    interlaced variants — out of scope for the sandbox), on images past
+    TOMIX_IMG_MAX_PIXELS (checked at IHDR) and on IDAT that inflates to
+    more than IHDR declares (inflation stops one byte past it) AND on
     truncated/corrupt streams — fuzzed so no zlib.error/struct.error/
     IndexError escapes to callers batching thousands of payloads."""
     import struct
@@ -456,7 +494,7 @@ def _decode_png_gray_impl(payload: bytes):
         raise ValueError("not a PNG: bad signature")
     pos = 8
     width = height = None
-    idat = b""
+    idat = []
     while pos + 8 <= len(payload):
         (size,) = struct.unpack(">I", payload[pos : pos + 4])
         tag = payload[pos + 4 : pos + 8]
@@ -469,17 +507,24 @@ def _decode_png_gray_impl(payload: bytes):
                 raise ValueError(
                     "decode_png_gray handles 8-bit non-interlaced grayscale only"
                 )
+            _check_pixel_cap("PNG", height, width, height * width)
         elif tag == b"IDAT":
-            idat += bytes(body)
+            idat.append(body)
         elif tag == b"IEND":
             break
         pos += 12 + size
     if width is None or not idat:
         raise ValueError("not a PNG: missing IHDR/IDAT")
-    raw = zlib.decompress(idat)
+    # inflate at most one byte past what IHDR declares, so a stream that
+    # inflates to more than the image (a decompression bomb) is rejected
+    # without being inflated
     stride = width + 1
+    inflater = zlib.decompressobj()
+    raw = inflater.decompress(b"".join(idat), stride * height + 1)
     if len(raw) != stride * height:
         raise ValueError("PNG scanline data has wrong length")
+    if not inflater.eof:
+        raise ValueError("truncated or corrupt PNG: IDAT stream incomplete")
     out = np.zeros((height, width), dtype=np.int32)
     for r in range(height):
         ftype = raw[r * stride]
@@ -510,23 +555,28 @@ def _decode_png_gray_impl(payload: bytes):
     return out.astype(np.uint8)
 
 
-# -- baseline JPEG codec (sequential DCT, Huffman) ---------------------------
+# -- JPEG codec (Huffman DCT, ITU-T T.81) ------------------------------------
 # Real pixel-level JPEG in the same stdlib-only style as the PNG codec
-# above: ITU-T T.81 baseline. Real corpora are JPEG-heavy — header-only
-# parsing (the _decode_jpeg_header above) covers metadata, but the
-# perceptual-hash near-dup path needs PIXELS, so encode/decode are
-# implemented for real: level shift, 2D DCT, Annex-K quantization
-# (libjpeg quality scaling), zigzag, DC-differential + AC run-length
-# Huffman with byte stuffing. The DECODER also handles interleaved
-# 3-component YCbCr at any baseline sampling (4:4:4/4:2:2/4:2:0),
-# returning the luma plane — chroma blocks are entropy-decoded to keep
-# bitstream sync but skip dequant/IDCT, since dHash consumes grayscale
-# anyway. The ENCODER stays grayscale (it exists for tests/fixtures).
-# PROGRESSIVE (SOF2) streams decode via _decode_jpeg_progressive:
-# multi-scan coefficient accumulation (DC first/refine, AC first/refine
-# with EOB runs per Annex G), luma-only IDCT at the end. CMYK /
-# lossless / arithmetic-coded streams raise (the decode_png_gray
-# honest-contract precedent; inject a codec-backed decoder for those).
+# above. Real corpora are JPEG-heavy — header-only parsing covers
+# metadata, but the perceptual-hash near-dup path needs PIXELS, so
+# encode/decode are implemented for real: level shift, 2D DCT, Annex-K
+# quantization (libjpeg quality scaling), zigzag, DC-differential + AC
+# run-length Huffman with byte stuffing. The ENCODER writes baseline
+# grayscale (it exists for tests/fixtures). The DECODER is one path of
+# three pieces, each written once: the marker walk (_jpeg_segments,
+# also used by the header parse and the EXIF lookup), one scan loop
+# (_jpeg_scan: MCU order for multi-component scans, block raster for
+# single-component ones, one block step per scan kind — sequential,
+# progressive DC, progressive AC) and one luma dequantize + IDCT
+# (_jpeg_luma_pixels). A sequential scan is the Ss=0..63, Ah=Al=0 case
+# of the progressive machinery (T.81 A.2), so baseline grayscale,
+# interleaved YCbCr at any sampling, non-interleaved baseline and
+# progressive streams share the loop and every bound (_JpegFrame). Only
+# luma coefficients are stored: chroma inside a multi-component scan
+# decodes into a scratch block for bitstream sync, chroma-only scans
+# are skipped whole. CMYK / lossless / arithmetic-coded streams raise
+# (the decode_png_gray honest-contract precedent; inject a
+# codec-backed decoder for those).
 
 _ZIGZAG = [
     0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
@@ -579,6 +629,7 @@ def _huff_codes(bits, vals):
     return out
 
 
+@cache  # one read-only matrix shared by every encode and decode
 def _dct_mat():
     import numpy as np
 
@@ -589,6 +640,7 @@ def _dct_mat():
             m[k, x] = np.cos((2 * x + 1) * k * np.pi / 16) * (
                 np.sqrt(0.125) if k == 0 else 0.5
             )
+    m.flags.writeable = False
     return m
 
 
@@ -790,35 +842,37 @@ def _jpeg_extend(bits: int, size: int) -> int:
 
 
 def decode_jpeg_gray(payload: bytes):
-    """Decode a baseline JPEG to its (h, w) uint8 LUMA plane —
-    REAL decode: marker walk, DQT/DHT table construction (any
-    spec-conforming tables, not just the Annex-K ones our encoder
-    writes), Huffman entropy decode with byte unstuffing, DC prediction,
-    dequantize, dezigzag, IDCT. 3-component YCbCr streams (any baseline
-    sampling) decode to their LUMA plane — chroma is entropy-decoded
-    for bitstream sync, never IDCT'd. Progressive (SOF2) streams decode
-    through the multi-scan path (``_decode_jpeg_progressive``; scan
-    count bounded at 512 — T.81 legally allows hundreds via spectral
-    bands x successive-approximation refinements, real encoders emit
-    ~10, so a spec-corner file past 512 raises as a documented DoS
-    bound). Non-interleaved baseline (one component per scan) decodes
-    via ``_decode_jpeg_noninterleaved``. Raises ValueError for CMYK /
-    lossless / arithmetic streams and partial-interleave scan subsets
-    (the decode_png_gray honest-contract rule: inject a codec-backed
-    decoder for those) AND for truncated/corrupt streams — fuzzed so no
-    IndexError/struct.error escapes to callers batching thousands of
-    payloads."""
+    """Decode a JPEG to its (h, w) uint8 LUMA plane — REAL decode:
+    marker walk, DQT/DHT table construction (any spec-conforming tables,
+    not just the Annex-K ones our encoder writes), Huffman entropy
+    decode with byte unstuffing, dequantize, dezigzag, IDCT. One path
+    serves every layout T.81 codes with Huffman tables at 8-bit
+    precision: baseline grayscale (any sampling factors), interleaved
+    3-component YCbCr at any sampling (4:4:4/4:2:2/4:2:0),
+    non-interleaved baseline (one component per scan) and progressive
+    (SOF2: spectral selection, successive approximation, EOB runs).
+    Only luma is reconstructed — chroma inside an interleaved scan is
+    entropy-decoded for bitstream sync, a chroma-only scan is skipped
+    whole. At most 512 scans (real encoders emit ~10; T.81 legally
+    allows hundreds via spectral bands x refinements, so a spec-corner
+    file past 512 raises as a documented DoS bound). Raises ValueError
+    for CMYK / lossless / arithmetic streams and partial-interleave
+    baseline scans (the decode_png_gray honest-contract rule: inject a
+    codec-backed decoder for those) AND for truncated/corrupt streams —
+    fuzzed so no IndexError/struct.error escapes to callers batching
+    thousands of payloads."""
     import struct
 
     try:
         return _decode_jpeg_gray_impl(payload)
-    except (IndexError, struct.error) as exc:
+    except (IndexError, OverflowError, struct.error) as exc:
         raise ValueError(f"truncated or corrupt JPEG: {exc!r}") from exc
 
 
 def _parse_dqt(body: bytes, qtables: dict) -> None:
-    """DQT segment -> 8x8 dezigzagged int64 tables (shared by the
-    baseline and the progressive inter-scan marker walks)."""
+    """DQT segment -> 8x8 dezigzagged int64 tables (redefinable between
+    scans; each definition is a new array, so a latched table stays
+    put)."""
     import numpy as np
 
     bpos = 0
@@ -833,8 +887,8 @@ def _parse_dqt(body: bytes, qtables: dict) -> None:
 
 
 def _parse_dht(body: bytes, htables: dict) -> None:
-    """DHT segment -> (code, length) -> symbol lookup dicts (shared by
-    both marker walks; tables are redefinable between scans)."""
+    """DHT segment -> (code, length) -> symbol lookup dicts (tables are
+    redefinable between scans)."""
     bpos = 0
     while bpos < len(body):
         tc, th = body[bpos] >> 4, body[bpos] & 0x0F
@@ -848,613 +902,280 @@ def _parse_dht(body: bytes, htables: dict) -> None:
         bpos += 17 + nv
 
 
+class _JpegComp(NamedTuple):
+    id: int
+    h: int  # sampling factors
+    v: int
+    tq: int  # quant table id
+    bw: int  # real (not MCU-padded) block columns and rows
+    bh: int
+
+
+class _JpegFrame:
+    """SOF geometry (T.81 A.1.1, A.2.4): the components, the MCU grid and
+    the luma output size. Component 0 is luma (JFIF/Adobe convention)."""
+
+    def __init__(self, body: bytes, progressive: bool) -> None:
+        import struct
+
+        prec, self.h, self.w, nc = struct.unpack(">BHHB", body[:6])
+        if prec != 8:
+            raise ValueError("decode_jpeg_gray handles 8-bit precision only")
+        if nc not in (1, 3):
+            raise ValueError(
+                "only 1-component (gray) or 3-component (YCbCr) "
+                "JPEG is supported (CMYK/4-component unsupported)"
+            )
+        self.progressive = progressive
+        sampling = []
+        for i in range(nc):
+            cid, hv, tq = body[6 + 3 * i], body[7 + 3 * i], body[8 + 3 * i]
+            hi, vi = hv >> 4, hv & 0x0F
+            if not (1 <= hi <= 4 and 1 <= vi <= 4):
+                raise ValueError(f"JPEG sampling factors {hi}x{vi} out of range")
+            sampling.append((cid, hi, vi, tq))
+        hmax = max(c[1] for c in sampling)
+        vmax = max(c[2] for c in sampling)
+        self.mcux = -(-self.w // (8 * hmax))
+        self.mcuy = -(-self.h // (8 * vmax))
+        self.comps = [
+            _JpegComp(
+                cid, hi, vi, tq,
+                -(-(-(-self.w * hi // hmax)) // 8), -(-(-(-self.h * vi // vmax)) // 8),
+            )
+            for cid, hi, vi, tq in sampling
+        ]
+        self.out_w = -(-self.w * sampling[0][1] // hmax)
+        self.out_h = -(-self.h * sampling[0][2] // vmax)
+
+    def alloc_luma(self, payload_len: int):
+        """Bound the decode's memory, then allocate the luma coefficient
+        plane (MCU-padded blocks x 64 zigzag-ordered int64 cells). SOF
+        dimensions are untrusted input, so every bound is checked BEFORE
+        any allocation: the padded luma plane against
+        TOMIX_IMG_MAX_PIXELS; and, for progressive streams, whose EOB
+        runs let a few bytes code thousands of blocks, the coefficient
+        buffers of ALL components (the envelope a full progressive
+        decode needs) at 32 bytes per capped pixel and at
+        max(TOMIX_JPEG_PROG_ALLOC_FLOOR_MB, 1024 x payload bytes).
+        DELIBERATE tradeoff: a legitimate but extremely compressible
+        progressive image (a blank scanned page) between the floor and
+        1024x its payload is rejected too — amplification itself is the
+        threat signature; deployments that ingest large flat scans raise
+        the floor."""
+        import numpy as np
+
+        h0, v0 = self.comps[0].h, self.comps[0].v
+        n_px = self.mcuy * v0 * 8 * self.mcux * h0 * 8
+        buf_bytes = self.mcux * self.mcuy * sum(c.h * c.v for c in self.comps) * 64 * 8
+        _check_pixel_cap(
+            "JPEG", self.h, self.w,
+            max(n_px, buf_bytes // 32) if self.progressive else n_px,
+        )
+        if self.progressive:
+            floor_mb = knob("TOMIX_JPEG_PROG_ALLOC_FLOOR_MB")
+            if buf_bytes > max(floor_mb << 20, 1024 * payload_len):
+                need_mb = -(-buf_bytes // (1 << 20))  # ceil MB that would admit it
+                raise ValueError(
+                    "progressive JPEG coefficient buffers exceed the payload-"
+                    f"proportional allocation bound ({buf_bytes} bytes from a "
+                    f"{payload_len}-byte payload); a legitimate image of this "
+                    f"geometry needs TOMIX_JPEG_PROG_ALLOC_FLOOR_MB>={need_mb} "
+                    f"(current floor {floor_mb} MB)"
+                )
+        return np.zeros((self.mcuy * v0, self.mcux * h0, 64), dtype=np.int64)
+
+    def scan_blocks(self, scan: list) -> int:
+        """Number of blocks a scan codes (T.81 A.2.2/A.2.3)."""
+        if len(scan) > 1:
+            return self.mcux * self.mcuy * sum(
+                self.comps[ci].h * self.comps[ci].v for ci, _, _ in scan
+            )
+        comp = self.comps[scan[0][0]]
+        return comp.bw * comp.bh
+
+
 def _decode_jpeg_gray_impl(payload: bytes):
     import struct
 
-    import numpy as np
-
-    if payload[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG: bad SOI signature")
-    pos = 2
     qtables: dict = {}
     htables: dict = {}
-    h = w = None
-    comps: list = []  # SOF order: (component_id, h_i, v_i, tq)
-    scan_tabs: dict = {}  # component_id -> (td, ta)
-    data_start = None
     restart_interval = 0
-    progressive = False
-    while pos + 4 <= len(payload):
-        if payload[pos] != 0xFF:
-            raise ValueError("not a JPEG: lost marker sync")
-        marker = payload[pos + 1]
-        if marker == 0xFF:  # fill bytes before a marker (T.81 B.1.1.2)
-            pos += 1
-            continue
-        if marker == 0xD9:
-            break
-        if marker == 0x01 or 0xD0 <= marker <= 0xD7:  # standalone markers
-            pos += 2
-            continue
-        (seglen,) = struct.unpack(">H", payload[pos + 2 : pos + 4])
-        body = payload[pos + 4 : pos + 2 + seglen]
+    frame = luma = qt = None
+    n_scans = 0
+    for marker, body, data in _jpeg_segments(payload):
         if marker == 0xDB:
             _parse_dqt(body, qtables)
         elif marker == 0xC4:
             _parse_dht(body, htables)
+        elif marker == 0xDD:
+            (restart_interval,) = struct.unpack(">H", body[:2])
         elif marker in (0xC0, 0xC2):
-            progressive = marker == 0xC2
-            prec, h, w, nc = struct.unpack(">BHHB", body[:6])
-            if prec != 8:
-                raise ValueError("decode_jpeg_gray handles 8-bit precision only")
-            if nc not in (1, 3):
-                raise ValueError(
-                    "only 1-component (gray) or 3-component (YCbCr) baseline "
-                    "JPEG is supported (CMYK/4-component unsupported)"
-                )
-            if nc == 1 and body[7] != 0x11 and not progressive:
-                raise ValueError("subsampled single-component JPEG unsupported")
-            for i in range(nc):
-                cid, hv, tq = body[6 + 3 * i], body[7 + 3 * i], body[8 + 3 * i]
-                hi, vi = hv >> 4, hv & 0x0F
-                if not (1 <= hi <= 4 and 1 <= vi <= 4):
-                    raise ValueError(f"JPEG sampling factors {hi}x{vi} out of range")
-                comps.append((cid, hi, vi, tq))
-        elif marker in (0xC1, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA,
-                        0xCB, 0xCD, 0xCE, 0xCF):
+            if frame is not None:
+                raise ValueError("JPEG has more than one frame header")
+            frame = _JpegFrame(body, progressive=marker == 0xC2)
+        elif marker in _JPEG_SOF_MARKERS:
             raise ValueError(
                 "only baseline-sequential or progressive JPEG is supported"
             )
-        elif marker == 0xDD:
-            (restart_interval,) = struct.unpack(">H", body[:2])
         elif marker == 0xDA:
-            if not comps:
+            if frame is None:
                 raise ValueError("not a JPEG: SOS before SOF")
-            if progressive:
-                return _decode_jpeg_progressive(
-                    payload, pos, h, w, comps, qtables, htables,
-                    restart_interval,
-                )
-            if body[0] != len(comps):
-                # per-component sequential scans (non-interleaved
-                # baseline, T.81 A.2.2) — legal, produced by some old
-                # encoders; decode through the multi-scan walk (which
-                # also skips chroma scans entirely instead of
-                # Huffman-walking them for sync)
-                return _decode_jpeg_noninterleaved(
-                    payload, pos, h, w, comps, qtables, htables,
-                    restart_interval,
-                )
-            for i in range(body[0]):
-                cs, tdta = body[1 + 2 * i], body[2 + 2 * i]
-                scan_tabs[cs] = (tdta >> 4, tdta & 0x0F)
-            data_start = pos + 2 + seglen
-            break
-        pos += 2 + seglen
-    if h is None or data_start is None:
-        raise ValueError("not a JPEG: missing SOF/SOS")
-    # resolve per-component decode state; the LUMA plane is SOF component
-    # 0 (Y by JFIF/Adobe convention) — chroma blocks are Huffman-decoded
-    # to advance the bitstream but never dequantized/IDCT'd (dHash needs
-    # only luma, and skipping chroma IDCT is ~2/3 of the math at 4:4:4)
-    plan = []
-    for cid, hi, vi, tq in comps:
-        if cid not in scan_tabs:
-            raise ValueError("SOS component id missing from SOF")
-        td, ta = scan_tabs[cid]
-        qt_c = qtables.get(tq)
-        dc_tab = htables.get((0, td))
-        ac_tab = htables.get((1, ta))
-        if qt_c is None or dc_tab is None or ac_tab is None:
-            raise ValueError("JPEG missing quant/Huffman tables")
-        plan.append((hi, vi, qt_c, dc_tab, ac_tab))
-    hmax = max(p[0] for p in plan)
-    vmax = max(p[1] for p in plan)
-    h0, v0 = plan[0][0], plan[0][1]
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    # luma plane: Y's own sampling grid; for the standard case (Y carries
-    # hmax x vmax) this is the full image resolution
-    ph, pw = mcuy * v0 * 8, mcux * h0 * 8
-    out_h = -(-h * v0 // vmax)
-    out_w = -(-w * h0 // hmax)
-    # SOF dimensions are untrusted input: bound the allocation BEFORE
-    # np.zeros so a crafted small payload with huge h/w raises ValueError
-    # (the exception-hygiene contract) instead of OOM-killing the worker.
-    # Structural floor: every block costs >= 2 Huffman bits (1-bit DC code
-    # + 1-bit EOB), so blocks > 4 * entropy_bytes cannot all be coded.
-    n_blocks = mcux * mcuy * sum(p[0] * p[1] for p in plan)
-    entropy_bytes = max(1, len(payload) - data_start)
-    if n_blocks > 4 * entropy_bytes:
-        raise ValueError(
-            "JPEG SOF dimensions exceed what the entropy data could code"
-        )
-    max_px = knob("TOMIX_IMG_MAX_PIXELS")
-    if ph * pw > max_px:
-        raise ValueError(
-            f"JPEG dimensions {h}x{w} exceed TOMIX_IMG_MAX_PIXELS={max_px}"
-        )
-    br = _BitReader(payload[data_start:])
-    dmat = _dct_mat()
-    out = np.zeros((ph, pw), dtype=np.float64)
-    prev_dc = [0] * len(plan)
-    mcu = 0
-    rst = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                br.restart(rst)
-                rst += 1
-                prev_dc = [0] * len(plan)
-            mcu += 1
-            for ci, (hi, vi, qt_c, dc_tab, ac_tab) in enumerate(plan):
-                for bv in range(vi):
-                    for bh in range(hi):
-                        zz = np.zeros(64, dtype=np.int64)
-                        size = br.huff(dc_tab)
-                        prev_dc[ci] += _jpeg_extend(br.bits(size), size)
-                        zz[0] = prev_dc[ci]
-                        k = 1
-                        while k < 64:
-                            rs = br.huff(ac_tab)
-                            run, size = rs >> 4, rs & 0x0F
-                            if rs == 0x00:  # EOB
-                                break
-                            if rs == 0xF0:  # ZRL
-                                k += 16
-                                continue
-                            k += run
-                            if k > 63:
-                                raise ValueError(
-                                    "JPEG AC coefficient index overflow"
-                                )
-                            zz[k] = _jpeg_extend(br.bits(size), size)
-                            k += 1
-                        if ci != 0:
-                            continue  # chroma: bitstream advanced, no IDCT
-                        coef = np.zeros(64, dtype=np.float64)
-                        coef[_ZIGZAG] = zz
-                        block = dmat.T @ (coef.reshape(8, 8) * qt_c) @ dmat
-                        by = (my * v0 + bv) * 8
-                        bx = (mx * h0 + bh) * 8
-                        out[by : by + 8, bx : bx + 8] = block + 128.0
-    return np.clip(np.rint(out[:out_h, :out_w]), 0, 255).astype(np.uint8)
-
-
-def _entropy_end(payload: bytes, start: int) -> int:
-    """First non-stuffing, non-RST marker position at or after ``start``
-    (shared by the progressive and non-interleaved multi-scan walks)."""
-    i = start
-    n = len(payload)
-    while i + 1 < n:
-        if payload[i] == 0xFF:
-            nxt = payload[i + 1]
-            if nxt == 0x00 or 0xD0 <= nxt <= 0xD7:
-                i += 2
-                continue
-            return i
-        i += 1
-    return n
-
-
-def _decode_jpeg_noninterleaved(
-    payload, pos, h, w, comps, qtables, htables, restart_interval
-):
-    """Baseline-sequential NON-INTERLEAVED decode (T.81 A.2.2): each
-    scan codes exactly ONE component's data units in block-raster order
-    — the per-component multi-scan layout some old encoders emit (the
-    round-11 advice's acknowledged rare case, now covered). Only the
-    LUMA (SOF component 0) scan is entropy-decoded; chroma scans are
-    self-contained and skipped wholesale via ``_entropy_end`` — cheaper
-    than the interleaved path, which must Huffman-walk chroma for sync.
-    Partial-interleave scans (1 < Ns < Nf component subsets) remain
-    unsupported and raise. ``pos`` points at the first SOS marker;
-    DQT/DHT/DRI may be redefined between scans (tables latch at the
-    luma scan, libjpeg semantics)."""
-    import struct
-
-    import numpy as np
-
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    cid0, h0, v0, tq0 = comps[0]
-    bw = -(-(-(-w * h0 // hmax)) // 8)
-    bh = -(-(-(-h * v0 // vmax)) // 8)
-    max_px = knob("TOMIX_IMG_MAX_PIXELS")
-    if bh * 8 * bw * 8 > max_px:
-        raise ValueError(
-            f"JPEG dimensions {h}x{w} exceed TOMIX_IMG_MAX_PIXELS={max_px}"
-        )
-    buf = np.zeros((bh, bw, 64), dtype=np.int64)
-    qt = None
-    saw_luma = False
-    while pos + 4 <= len(payload):
-        if payload[pos] != 0xFF:
-            raise ValueError("not a JPEG: lost marker sync")
-        marker = payload[pos + 1]
-        if marker == 0xFF:
-            pos += 1
-            continue
-        if marker == 0xD9:
-            break
-        if marker == 0x01 or 0xD0 <= marker <= 0xD7:
-            pos += 2
-            continue
-        (seglen,) = struct.unpack(">H", payload[pos + 2 : pos + 4])
-        body = payload[pos + 4 : pos + 2 + seglen]
-        if marker == 0xC4:
-            _parse_dht(body, htables)
-        elif marker == 0xDB:
-            _parse_dqt(body, qtables)
-        elif marker == 0xDD:
-            (restart_interval,) = struct.unpack(">H", body[:2])
-        elif marker == 0xDA:
-            ns = body[0]
-            if ns != 1:
-                raise ValueError(
-                    "non-interleaved baseline: partial-interleave scans "
-                    f"(Ns={ns} of {len(comps)} components) unsupported"
-                )
-            cs, tdta = body[1], body[2]
-            dstart = pos + 2 + seglen
-            dend = _entropy_end(payload, dstart)
-            if cs == cid0:
-                td, ta = tdta >> 4, tdta & 0x0F
-                dc_tab = htables.get((0, td))
-                ac_tab = htables.get((1, ta))
-                qt_now = qtables.get(tq0)
-                if dc_tab is None or ac_tab is None or qt_now is None:
-                    raise ValueError("JPEG missing quant/Huffman tables")
-                qt = qt_now.copy()  # latch at luma's scan (libjpeg)
-                # same structural floor as the interleaved path: every
-                # block costs >= 2 bits (1-bit DC code + 1-bit EOB)
-                if bw * bh > 4 * max(1, dend - dstart):
-                    raise ValueError(
-                        "JPEG SOF dimensions exceed what the entropy "
-                        "data could code"
-                    )
-                br = _BitReader(payload[dstart:dend])
-                prev_dc = 0
-                n_units = 0
-                rst = 0
-                for by in range(bh):
-                    for bx in range(bw):
-                        if (
-                            restart_interval
-                            and n_units
-                            and n_units % restart_interval == 0
-                        ):
-                            br.restart(rst)
-                            rst += 1
-                            prev_dc = 0
-                        n_units += 1
-                        zz = buf[by, bx]
-                        size = br.huff(dc_tab)
-                        prev_dc += _jpeg_extend(br.bits(size), size)
-                        zz[0] = prev_dc
-                        k = 1
-                        while k < 64:
-                            rs = br.huff(ac_tab)
-                            run, size = rs >> 4, rs & 0x0F
-                            if rs == 0x00:
-                                break
-                            if rs == 0xF0:
-                                k += 16
-                                continue
-                            k += run
-                            if k > 63:
-                                raise ValueError(
-                                    "JPEG AC coefficient index overflow"
-                                )
-                            zz[k] = _jpeg_extend(br.bits(size), size)
-                            k += 1
-                saw_luma = True
-            pos = dend
-            continue
-        pos += 2 + seglen
-    if not saw_luma:
-        raise ValueError("non-interleaved JPEG has no luma scan")
-    dmat = _dct_mat()
-    out = np.zeros((bh * 8, bw * 8), dtype=np.float64)
-    for by in range(bh):
-        for bx in range(bw):
-            coef = np.zeros(64, dtype=np.float64)
-            coef[_ZIGZAG] = buf[by, bx]
-            block = dmat.T @ (coef.reshape(8, 8) * qt) @ dmat
-            out[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = block + 128.0
-    out_h = -(-h * v0 // vmax)
-    out_w = -(-w * h0 // hmax)
-    return np.clip(np.rint(out[:out_h, :out_w]), 0, 255).astype(np.uint8)
-
-
-def _decode_jpeg_progressive(
-    payload, pos, h, w, comps, qtables, htables, restart_interval
-):
-    """Progressive (SOF2) decode per T.81 Annex G: scans accumulate DCT
-    coefficients into per-component buffers — DC first/refinement scans
-    (interleaved MCU order when Ns>1), AC first/refinement scans (always
-    single-component, block raster order, EOB-run coded; the refinement
-    pass is the G.1.2.3 correction-bit algorithm) — then the LUMA plane
-    alone is dequantized and IDCT'd, exactly as the baseline path does.
-    Most web-era JPEGs are progressive (mozjpeg default), so the
-    perceptual-hash pipeline needs this for real corpora. ``pos`` points
-    at the first SOS marker; DHT/DQT/DRI may be redefined between scans.
-    """
-    import struct
-
-    import numpy as np
-
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    # per-component geometry: MCU-padded buffer dims (interleaved scans
-    # code padding blocks) and REAL block dims (non-interleaved scans
-    # cover only those — T.81 A.2.2)
-    geo = []
-    total_blocks = 0
-    for cid, hi, vi, tq in comps:
-        bw_pad, bh_pad = mcux * hi, mcuy * vi
-        bw_real = -(-(-(-w * hi // hmax)) // 8)
-        bh_real = -(-(-(-h * vi // vmax)) // 8)
-        geo.append((cid, hi, vi, tq, bw_pad, bh_pad, bw_real, bh_real))
-        total_blocks += bw_pad * bh_pad
-    max_px = knob("TOMIX_IMG_MAX_PIXELS")
-    # three bounds, all required, and all denominated in what they
-    # actually protect (round-12 verdict #7 — the old geometry bound
-    # counted CELLS, reading 4x looser than the bytes it admitted):
-    # the LUMA plane itself must respect the pixel cap exactly as the
-    # baseline path enforces it (a 1-component or 4:2:0 stream
-    # previously slipped through the coefficient bound 4x over the cap
-    # — caught by review); the total coefficient-buffer BYTES bound the
-    # GEOMETRY at 32 bytes per capped pixel (4 planes — 3 chroma-
-    # subsampled/MCU-padded components of any legal sampling + slack —
-    # x 8-byte int64 cells); and the buffer bytes are additionally
-    # capped relative to the payload size (amplification <= 1024x,
-    # TOMIX_JPEG_PROG_ALLOC_FLOOR_MB floor, default 16), because EOB
-    # runs let a tiny progressive payload legally claim multi-GB int64
-    # buffers under the geometry bound alone — a few-hundred-byte
-    # payload can now demand at most the floor, not the 64 MB the old
-    # floor admitted. DELIBERATE tradeoff: a LEGITIMATE but extremely
-    # compressible progressive image (blank scanned page, test chart)
-    # whose coefficient buffers land between the floor and 1024x its
-    # payload is rejected too — e.g. a few-KB 2048x2048 blank gray
-    # needs 33.5 MB of buffers. That is the zip-bomb-guard posture
-    # (amplification itself is the threat signature); deployments that
-    # ingest large flat scans raise the floor explicitly instead of
-    # the guard silently admitting crafted payloads of the same shape.
-    luma_px = (geo[0][5] * 8) * (geo[0][4] * 8)
-    buf_bytes = total_blocks * 64 * 8  # int64 coefficient cells
-    if luma_px > max_px or buf_bytes > 32 * max_px:
-        raise ValueError(
-            f"JPEG dimensions {h}x{w} exceed TOMIX_IMG_MAX_PIXELS={max_px}"
-        )
-    floor_mb = knob("TOMIX_JPEG_PROG_ALLOC_FLOOR_MB")
-    if buf_bytes > max(floor_mb << 20, 1024 * len(payload)):
-        need_mb = -(-buf_bytes // (1 << 20))  # ceil MB that would admit it
-        raise ValueError(
-            "progressive JPEG coefficient buffers exceed the payload-"
-            f"proportional allocation bound ({buf_bytes} bytes from a "
-            f"{len(payload)}-byte payload); a legitimate image of this "
-            f"geometry needs TOMIX_JPEG_PROG_ALLOC_FLOOR_MB>={need_mb} "
-            f"(current floor {floor_mb} MB)"
-        )
-    bufs = [
-        np.zeros((g[5], g[4], 64), dtype=np.int64) for g in geo
-    ]  # [comp][by, bx, zigzag-k]
-    cid_index = {g[0]: i for i, g in enumerate(geo)}
-
-    def entropy_end(start: int) -> int:
-        return _entropy_end(payload, start)
-
-    # the baseline entropy-floor guard does not apply here (an EOB run
-    # legitimately codes thousands of blocks in a few bits), so bound
-    # the block-loop work by capping scans instead: real progressive
-    # encoders emit ~10, but T.81 legally allows per-coefficient
-    # spectral bands x up to 13 successive-approximation refinements
-    # per band per component (hundreds of scans) — 512 admits those
-    # spec-corner files while still bounding a crafted scan flood
-    n_scans = 0
-    saw_scan = False
-    # libjpeg latches each component's quant table at its FIRST
-    # coefficient-bearing scan; a mid-stream DQT redefinition applies
-    # only to components whose first scan comes later. Snapshot at scan
-    # time so a redefining file dequantizes exactly as libjpeg would
-    # (last-definition-wins was the previous, divergent behavior).
-    qt_snap: dict = {}
-    while pos + 4 <= len(payload):
-        if payload[pos] != 0xFF:
-            raise ValueError("not a JPEG: lost marker sync")
-        marker = payload[pos + 1]
-        if marker == 0xFF:
-            pos += 1
-            continue
-        if marker == 0xD9:
-            break
-        if marker == 0x01 or 0xD0 <= marker <= 0xD7:
-            pos += 2
-            continue
-        (seglen,) = struct.unpack(">H", payload[pos + 2 : pos + 4])
-        body = payload[pos + 4 : pos + 2 + seglen]
-        if marker == 0xC4:
-            _parse_dht(body, htables)
-        elif marker == 0xDB:
-            _parse_dqt(body, qtables)
-        elif marker == 0xDD:
-            (restart_interval,) = struct.unpack(">H", body[:2])
-        elif marker == 0xDA:
-            ns = body[0]
-            scan = []
-            for i in range(ns):
-                cs, tdta = body[1 + 2 * i], body[2 + 2 * i]
-                if cs not in cid_index:
-                    raise ValueError("SOS component id missing from SOF")
-                scan.append((cid_index[cs], tdta >> 4, tdta & 0x0F))
-            ss, se = body[1 + 2 * ns], body[2 + 2 * ns]
-            ahal = body[3 + 2 * ns]
-            ah, al = ahal >> 4, ahal & 0x0F
             n_scans += 1
             if n_scans > 512:
-                raise ValueError("progressive JPEG has implausibly many scans")
-            for ci, _td, _ta in scan:
-                if ci not in qt_snap:
-                    tq_c = geo[ci][3]
-                    if tq_c in qtables:
-                        qt_snap[ci] = qtables[tq_c].copy()
-            dstart = pos + 2 + seglen
-            dend = entropy_end(dstart)
-            _jpeg_progressive_scan(
-                payload[dstart:dend], scan, ss, se, ah, al, geo, bufs,
-                htables, restart_interval, mcux, mcuy,
+                raise ValueError("JPEG has implausibly many scans")
+            ids = [c.id for c in frame.comps]
+            ns = body[0]
+            scan = []  # (component index, DC table id, AC table id)
+            for i in range(ns):
+                cs, tdta = body[1 + 2 * i], body[2 + 2 * i]
+                if cs not in ids:
+                    raise ValueError("SOS component id missing from SOF")
+                scan.append((ids.index(cs), tdta >> 4, tdta & 0x0F))
+            ss, se, ahal = body[1 + 2 * ns], body[2 + 2 * ns], body[3 + 2 * ns]
+            if not frame.progressive:
+                # a sequential scan codes one component or all of them;
+                # its Ss/Se/Ah/Al are 0/63/0/0 by definition and ignored
+                if ns not in (1, len(ids)):
+                    raise ValueError(
+                        "partial-interleave baseline scans "
+                        f"(Ns={ns} of {len(ids)} components) unsupported"
+                    )
+                # structural floor: every block costs >= 2 Huffman bits
+                # (1-bit DC code + 1-bit EOB), so a scan claiming more
+                # than 4 blocks per entropy byte is a lie about the SOF
+                if frame.scan_blocks(scan) > 4 * max(1, len(data)):
+                    raise ValueError(
+                        "JPEG SOF dimensions exceed what the entropy data could code"
+                    )
+            elif ss == 0 and se != 0:
+                raise ValueError("progressive DC scan must have Se=0")
+            elif ss and (ns != 1 or se < ss or se > 63):
+                raise ValueError(
+                    "progressive AC scan must code one component over "
+                    "1 <= Ss <= Se <= 63"
+                )
+            if luma is None:
+                luma = frame.alloc_luma(len(payload))
+            if not any(ci == 0 for ci, _, _ in scan):
+                continue  # no luma in this scan: skipped whole
+            if qt is None:  # latched at luma's first scan (libjpeg)
+                qt = qtables.get(frame.comps[0].tq)
+                if qt is None:
+                    raise ValueError("JPEG missing quant/Huffman tables")
+            _jpeg_scan(
+                data, frame, luma, scan, (ss, se, ahal >> 4, ahal & 0x0F),
+                htables, restart_interval,
             )
-            saw_scan = True
-            pos = dend
-            continue
-        pos += 2 + seglen
-    if not saw_scan:
-        raise ValueError("not a JPEG: missing SOS")
-    # luma output: dequant + IDCT the REAL blocks of SOF component 0,
-    # using the table SNAPSHOTTED at luma's first scan (libjpeg
-    # semantics); fall back to the final definition only if luma somehow
-    # never appeared in a scan (its buffer is then all-zero anyway)
-    cid, h0, v0, tq0, bw_pad, bh_pad, bw_real, bh_real = geo[0]
-    qt = qt_snap.get(0, qtables.get(tq0))
+    if luma is None:
+        raise ValueError("not a JPEG: missing SOF/SOS")
     if qt is None:
-        raise ValueError("JPEG missing quant table")
-    dmat = _dct_mat()
-    out = np.zeros((bh_real * 8, bw_real * 8), dtype=np.float64)
-    for by in range(bh_real):
-        for bx in range(bw_real):
-            coef = np.zeros(64, dtype=np.float64)
-            coef[_ZIGZAG] = bufs[0][by, bx]
-            block = dmat.T @ (coef.reshape(8, 8) * qt) @ dmat
-            out[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = block + 128.0
-    out_h = -(-h * v0 // vmax)
-    out_w = -(-w * h0 // hmax)
-    return np.clip(np.rint(out[:out_h, :out_w]), 0, 255).astype(np.uint8)
+        raise ValueError("JPEG has no luma scan")
+    return _jpeg_luma_pixels(luma, qt, frame.out_h, frame.out_w)
 
 
-def _jpeg_progressive_scan(
-    data, scan, ss, se, ah, al, geo, bufs, htables, restart_interval,
-    mcux, mcuy,
-):
-    """One progressive scan into the coefficient buffers (T.81 G.2):
-    DC scans (ss==0) are MCU-interleaved when Ns>1; AC scans are always
-    single-component block-raster. Restart intervals reset DC predictors
-    and the EOB run and realign the bit reader."""
+def _jpeg_scan(data, frame, luma, scan, spectral, htables, restart_interval):
+    """Decode one scan's entropy data (T.81 F.2, G.2). A scan of several
+    components visits its blocks MCU by MCU; a single-component scan
+    visits that component's real blocks in raster order (A.2). Every
+    block goes through the step of the scan's kind: sequential (DC,
+    then run-length AC), progressive DC (first pass or refinement) or
+    progressive AC (first pass or refinement, with EOB runs). Luma
+    blocks land in ``luma``; chroma blocks decode into one scratch
+    block only to keep the bitstream in sync. A restart interval resets
+    the DC predictors and the EOB run."""
+    import numpy as np
+
+    ss, se, ah, al = spectral
     br = _BitReader(data)
-    if ss == 0:
-        if se != 0:
-            raise ValueError("progressive DC scan must have Se=0")
-        dc_tabs = {}
-        for ci, td, _ta in scan:
-            tab = htables.get((0, td))
-            if tab is None and ah == 0:
-                raise ValueError("JPEG missing quant/Huffman tables")
-            dc_tabs[ci] = tab
-        preds = {ci: 0 for ci, _, _ in scan}
-
-        def dc_unit(ci, by, bx):
-            buf = bufs[ci]
-            if ah == 0:
-                size = br.huff(dc_tabs[ci])
-                preds[ci] += _jpeg_extend(br.bits(size), size)
-                buf[by, bx, 0] = preds[ci] << al
-            else:  # refinement: one appended bit per block
-                if br.bits(1):
-                    buf[by, bx, 0] |= 1 << al
-
-        mcu = 0
-        rst = 0
-        if len(scan) > 1:  # interleaved MCU order over the scan components
-            for my in range(mcuy):
-                for mx in range(mcux):
-                    if restart_interval and mcu and mcu % restart_interval == 0:
-                        br.restart(rst)
-                        rst += 1
-                        preds = {ci: 0 for ci in preds}
-                    mcu += 1
-                    for ci, _td, _ta in scan:
-                        _cid, hi, vi = geo[ci][0], geo[ci][1], geo[ci][2]
-                        for bv in range(vi):
-                            for bh in range(hi):
-                                dc_unit(ci, my * vi + bv, mx * hi + bh)
-        else:  # single-component: raster over that component's real blocks
-            ci = scan[0][0]
-            bw_real, bh_real = geo[ci][6], geo[ci][7]
-            for by in range(bh_real):
-                for bx in range(bw_real):
-                    if restart_interval and mcu and mcu % restart_interval == 0:
-                        br.restart(rst)
-                        rst += 1
-                        preds = {ci: 0}
-                    mcu += 1
-                    dc_unit(ci, by, bx)
-        return
-    # AC scan: always one component (T.81 G.1.1.1)
-    if len(scan) != 1:
-        raise ValueError("progressive AC scan must be single-component")
-    if not (1 <= ss <= se <= 63):
-        raise ValueError("progressive AC scan has invalid spectral range")
-    ci, _td, ta = scan[0]
-    ac_tab = htables.get((1, ta))
-    if ac_tab is None:
-        raise ValueError("JPEG missing quant/Huffman tables")
-    buf = bufs[ci]
-    bw_real, bh_real = geo[ci][6], geo[ci][7]
+    pred = [0] * len(scan)  # DC predictors, by position in the scan
     eobrun = 0
-    p1, m1 = 1 << al, -(1 << al)
-    mcu = 0
-    rst = 0
-    for by in range(bh_real):
-        for bx in range(bw_real):
-            if restart_interval and mcu and mcu % restart_interval == 0:
-                br.restart(rst)
-                rst += 1
-                eobrun = 0
-            mcu += 1
-            blk = buf[by, bx]
-            if ah == 0:  # first pass for this band
-                if eobrun:
-                    eobrun -= 1
+
+    def tables(cls: int) -> list:  # per scan component; cls 0 = DC, 1 = AC
+        tabs = [htables.get((cls, entry[1 + cls])) for entry in scan]
+        if None in tabs:
+            raise ValueError("JPEG missing quant/Huffman tables")
+        return tabs
+
+    if not frame.progressive:
+        dc, ac = tables(0), tables(1)
+
+        def step(i, blk):
+            size = br.huff(dc[i])
+            pred[i] += _jpeg_extend(br.bits(size), size)
+            blk[0] = pred[i]
+            k = 1
+            while k < 64:
+                rs = br.huff(ac[i])
+                if rs == 0x00:  # EOB
+                    break
+                if rs == 0xF0:  # ZRL
+                    k += 16
                     continue
-                k = ss
-                while k <= se:
-                    rs = br.huff(ac_tab)
-                    r, s = rs >> 4, rs & 0x0F
-                    if s == 0:
-                        if r == 15:  # ZRL
-                            k += 16
-                            continue
-                        eobrun = (1 << r) - 1
-                        if r:
-                            eobrun += br.bits(r)
-                        break
-                    k += r
-                    if k > se:
-                        raise ValueError("JPEG AC coefficient index overflow")
-                    blk[k] = _jpeg_extend(br.bits(s), s) << al
-                    k += 1
-                continue
-            # refinement pass (G.1.2.3, the libjpeg AC_refine algorithm)
+                k += rs >> 4
+                if k > 63:
+                    raise ValueError("JPEG AC coefficient index overflow")
+                blk[k] = _jpeg_extend(br.bits(rs & 0x0F), rs & 0x0F)
+                k += 1
+
+    elif ss == 0 and ah == 0:  # DC first pass
+        dc = tables(0)
+
+        def step(i, blk):
+            size = br.huff(dc[i])
+            pred[i] += _jpeg_extend(br.bits(size), size)
+            blk[0] = pred[i] << al
+
+    elif ss == 0:  # DC refinement: one appended bit per block
+
+        def step(i, blk):
+            if br.bits(1):
+                blk[0] |= 1 << al
+
+    elif ah == 0:  # AC first pass for the band
+        (ac,) = tables(1)
+
+        def step(i, blk):
+            nonlocal eobrun
+            if eobrun:
+                eobrun -= 1
+                return
+            k = ss
+            while k <= se:
+                rs = br.huff(ac)
+                r, s = rs >> 4, rs & 0x0F
+                if s == 0:
+                    if r == 15:  # ZRL
+                        k += 16
+                        continue
+                    eobrun = (1 << r) - 1 + br.bits(r)
+                    break
+                k += r
+                if k > se:
+                    raise ValueError("JPEG AC coefficient index overflow")
+                blk[k] = _jpeg_extend(br.bits(s), s) << al
+                k += 1
+
+    else:  # AC refinement (G.1.2.3, the libjpeg AC_refine algorithm)
+        (ac,) = tables(1)
+        p1, m1 = 1 << al, -(1 << al)
+
+        def step(i, blk):
+            nonlocal eobrun
             k = ss
             if eobrun == 0:
                 while k <= se:
-                    rs = br.huff(ac_tab)
+                    rs = br.huff(ac)
                     r, s = rs >> 4, rs & 0x0F
                     val = 0
                     if s == 0:
                         if r != 15:
-                            eobrun = 1 << r
-                            if r:
-                                eobrun += br.bits(r)
+                            eobrun = (1 << r) + br.bits(r)
                             break
                         # r == 15: skip 16 zero-history positions
+                    elif s != 1:
+                        raise ValueError("progressive AC refinement size must be 1")
                     else:
-                        if s != 1:
-                            raise ValueError(
-                                "progressive AC refinement size must be 1"
-                            )
                         val = p1 if br.bits(1) else m1
                     while k <= se:
                         coef = blk[k]
@@ -1476,6 +1197,52 @@ def _jpeg_progressive_scan(
                         blk[k] += p1 if coef > 0 else m1
                     k += 1
                 eobrun -= 1
+
+    if len(scan) > 1:
+        scratch = np.zeros(64, dtype=np.int64)
+        layout = [(i, ci, frame.comps[ci]) for i, (ci, _, _) in enumerate(scan)]
+        units = (
+            [
+                (i, luma[my * c.v + bv, mx * c.h + bh] if ci == 0 else scratch)
+                for i, ci, c in layout
+                for bv in range(c.v)
+                for bh in range(c.h)
+            ]
+            for my in range(frame.mcuy)
+            for mx in range(frame.mcux)
+        )
+    else:  # only luma gets here: chroma-only scans are skipped whole
+        bw, bh = frame.comps[0].bw, frame.comps[0].bh
+        units = ([(0, luma[by, bx])] for by in range(bh) for bx in range(bw))
+    for n, unit in enumerate(units):
+        if restart_interval and n and n % restart_interval == 0:
+            br.restart(n // restart_interval - 1)
+            pred = [0] * len(scan)
+            eobrun = 0
+        for i, blk in unit:
+            step(i, blk)
+
+
+# natural (row-major) index -> zigzag index: the inverse of _ZIGZAG
+_UNZIGZAG = sorted(range(64), key=_ZIGZAG.__getitem__)
+
+
+def _jpeg_luma_pixels(luma, qt, out_h: int, out_w: int):
+    """Dequantize + IDCT the luma coefficient plane straight into uint8
+    pixels, one block row at a time (per block: ``dmat.T @ (coef * qt)
+    @ dmat + 128``, rounded and clipped), cropped to the image."""
+    import numpy as np
+
+    dmat = _dct_mat()
+    bh, bw = -(-out_h // 8), -(-out_w // 8)
+    out = np.empty((bh * 8, bw * 8), dtype=np.uint8)
+    for by in range(bh):
+        coef = luma[by, :bw][:, _UNZIGZAG].reshape(bw, 8, 8).astype(np.float64)
+        blocks = dmat.T @ (coef * qt) @ dmat + 128.0
+        out[by * 8 : by * 8 + 8] = (
+            np.clip(np.rint(blocks), 0, 255).transpose(1, 0, 2).reshape(8, bw * 8)
+        )
+    return out[:out_h, :out_w]
 
 
 # -- perceptual hashing + media near-dup -------------------------------------
@@ -1517,52 +1284,32 @@ def _jpeg_exif_orientation(payload: bytes) -> int:
     import struct
 
     try:
-        if payload[:2] != b"\xff\xd8":
+        for marker, body, _ in _jpeg_segments(payload):
+            if marker == 0xDA:  # SOS: entropy data follows
+                return 1
+            if marker != 0xE1 or body[:6] != b"Exif\x00\x00":
+                continue
+            tiff = body[6:]
+            if tiff[:2] == b"II":
+                endian = "<"
+            elif tiff[:2] == b"MM":
+                endian = ">"
+            else:
+                return 1
+            (magic,) = struct.unpack(endian + "H", tiff[2:4])
+            if magic != 42:
+                return 1
+            (ifd0,) = struct.unpack(endian + "I", tiff[4:8])
+            (n_entries,) = struct.unpack(endian + "H", tiff[ifd0 : ifd0 + 2])
+            for i in range(n_entries):
+                e = ifd0 + 2 + 12 * i
+                tag, typ, cnt = struct.unpack(endian + "HHI", tiff[e : e + 8])
+                if tag == 0x0112 and typ == 3 and cnt == 1:
+                    (val,) = struct.unpack(endian + "H", tiff[e + 8 : e + 10])
+                    return val if 1 <= val <= 8 else 1
             return 1
-        pos = 2
-        while pos + 4 <= len(payload):
-            if payload[pos] != 0xFF:
-                return 1
-            marker = payload[pos + 1]
-            if marker == 0xFF:
-                pos += 1
-                continue
-            if marker in (0xD9, 0xDA):  # EOI / SOS: entropy data follows
-                return 1
-            if marker == 0x01 or 0xD0 <= marker <= 0xD7:
-                pos += 2
-                continue
-            (seglen,) = struct.unpack(">H", payload[pos + 2 : pos + 4])
-            body = payload[pos + 4 : pos + 2 + seglen]
-            if marker == 0xE1 and body[:6] == b"Exif\x00\x00":
-                tiff = body[6:]
-                if tiff[:2] == b"II":
-                    endian = "<"
-                elif tiff[:2] == b"MM":
-                    endian = ">"
-                else:
-                    return 1
-                (magic,) = struct.unpack(endian + "H", tiff[2:4])
-                if magic != 42:
-                    return 1
-                (ifd0,) = struct.unpack(endian + "I", tiff[4:8])
-                (n_entries,) = struct.unpack(
-                    endian + "H", tiff[ifd0 : ifd0 + 2]
-                )
-                for i in range(n_entries):
-                    e = ifd0 + 2 + 12 * i
-                    tag, typ, cnt = struct.unpack(
-                        endian + "HHI", tiff[e : e + 8]
-                    )
-                    if tag == 0x0112 and typ == 3 and cnt == 1:
-                        (val,) = struct.unpack(
-                            endian + "H", tiff[e + 8 : e + 10]
-                        )
-                        return val if 1 <= val <= 8 else 1
-                return 1
-            pos += 2 + seglen
         return 1
-    except (IndexError, struct.error):
+    except (ValueError, IndexError, struct.error):
         return 1
 
 
@@ -1591,7 +1338,7 @@ def exif_transpose(px, orientation: int):
 
 def decode_image_gray(payload: bytes):
     """Signature-dispatched pixel decode: PNG (zlib + unfilter) or
-    baseline JPEG (Huffman + IDCT) -> (h, w) uint8 in DISPLAY
+    JPEG (Huffman + IDCT, luma plane) -> (h, w) uint8 in DISPLAY
     orientation — JPEG EXIF orientation tags (3/6/8 rotations, mirror
     variants) are parsed and normalized so a rotated re-save of the same
     image dHashes into the same Hamming bucket (round-11 verdict #5).
@@ -1609,9 +1356,9 @@ def decode_image_gray(payload: bytes):
 def perceptual_hash(media: DataFrame, id_col: str = "item_id", payload_col: str = "payload") -> DataFrame:
     """Arrow-batched decode + dHash over image payloads: one narrow
     mapInPandas pass with REAL pixel decodes — PNG via ``decode_png_gray``
-    (pure zlib) and baseline JPEG via ``decode_jpeg_gray`` (stdlib
-    Huffman+IDCT), signature-dispatched per row — emitting
-    (doc_id, dhash)."""
+    (pure zlib) and JPEG, baseline or progressive, via
+    ``decode_jpeg_gray`` (stdlib Huffman+IDCT, luma plane),
+    signature-dispatched per row — emitting (doc_id, dhash)."""
     from tomixpanel_spark.session import ship_package
 
     ship_package(media.sparkSession)

@@ -29,12 +29,15 @@ DataFrames (events / profiles / merges) — which is the engine's IR: no
 staged files between stages (SURVEY.md §1.3), just lineage. ``run`` wires
 the plan into the HTTP sinks and returns receipt summaries; sinks and
 source fetchers take injected transports, so nothing here touches the
-network implicitly.
+network implicitly. The plan names the source reads ``build`` cached
+(one parse shared by the format sniff and every stream); ``run``
+unpersists them once its summaries are in, and any other caller of
+``build`` owns them.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -50,6 +53,7 @@ from tomixpanel_spark.sinks.http import (
     mp_profile_record,
     summarize_receipts,
 )
+from tomixpanel_spark.sources.staging import valid_records
 
 
 @dataclass
@@ -57,6 +61,9 @@ class PipelinePlan:
     events: Optional[DataFrame] = None
     profiles: Optional[DataFrame] = None
     merges: Optional[DataFrame] = None
+    # the source reads build() cached (one parse shared by the sniff and
+    # every stream); run() releases them, build's other callers own them
+    cached: list = field(default_factory=list)
 
 
 def build(spark: SparkSession, config: dict) -> PipelinePlan:
@@ -69,12 +76,12 @@ def build(spark: SparkSession, config: dict) -> PipelinePlan:
 
     if name == "csv":
         from tomixpanel_spark.sources.csv import read_csv_all_strings
-        from tomixpanel_spark.sources.staging import valid_records
         from tomixpanel_spark.transforms.csv import CsvMapping, csv_events, csv_profiles
 
         # V3 gate at row granularity: malformed rows are quarantined out of
         # the transform input (the reference skips whole files on any error)
-        df = valid_records(read_csv_all_strings(spark, opts["path"], with_corrupt=True))
+        read = read_csv_all_strings(spark, opts["path"], with_corrupt=True)
+        df = valid_records(read)
         m = CsvMapping(
             event_name_col=opts["event_name_col"],
             distinct_id_col=opts["distinct_id_col"],
@@ -84,14 +91,13 @@ def build(spark: SparkSession, config: dict) -> PipelinePlan:
             import_tag=opts.get("import_tag"),
             token=token,
         )
-        plan = PipelinePlan(events=csv_events(df, m))
+        plan = PipelinePlan(events=csv_events(df, m), cached=[read])
         if opts.get("create_profiles"):
             plan.profiles = csv_profiles(df, m)
         return plan
 
     if name == "amplitude":
         from tomixpanel_spark.sources.amplitude import AmplitudeSource
-        from tomixpanel_spark.sources.staging import valid_records
         from tomixpanel_spark.transforms.amplitude import amplitude_to_mixpanel
 
         source = AmplitudeSource(
@@ -103,15 +109,14 @@ def build(spark: SparkSession, config: dict) -> PipelinePlan:
             http=opts.get("http"),
         )
         paths = opts.get("path") or source.fetch()
-        raw = valid_records(source.read(spark, paths))
+        read = source.read(spark, paths)
         out = amplitude_to_mixpanel(
-            raw, token=token, run_time_ms=opts.get("run_time_ms", 0)
+            valid_records(read), token=token, run_time_ms=opts.get("run_time_ms", 0)
         )
-        return PipelinePlan(out.events, out.profiles, out.merges)
+        return PipelinePlan(out.events, out.profiles, out.merges, [read])
 
     if name in ("ga", "ga360", "googleAnalytics"):
         from tomixpanel_spark.sources.gcs import GcsGaSource
-        from tomixpanel_spark.sources.staging import valid_records
         from tomixpanel_spark.transforms.ga import ga_events, ga_profiles
 
         source = GcsGaSource(
@@ -142,6 +147,7 @@ def build(spark: SparkSession, config: dict) -> PipelinePlan:
                 anchor_now_ms=opts.get("anchor_now_ms"),
             ),
             profiles=ga_profiles(raw, token=token),
+            cached=[read],
         )
 
     if name == "mixpanel":
@@ -150,27 +156,27 @@ def build(spark: SparkSession, config: dict) -> PipelinePlan:
             mp_export_events,
         )
 
-        raw = _mixpanel_export_raw(spark, opts)
-        plan = PipelinePlan(events=mp_export_events(raw))
+        read = _mixpanel_export_read(spark, opts)
+        plan = PipelinePlan(events=mp_export_events(valid_records(read)), cached=[read])
         # People migration (S8): config.source.options.doPeople pages
         # /engage and re-imports profiles (connectors/mixpanelETL.js:
         # 115-182). The profiles stream then rides run()'s /engage sink
         # (mixpanel destination) or the /identify reverse sink.
         if opts.get("doPeople") or opts.get("people"):
-            plan.profiles = mp_engage_profiles(
-                _mixpanel_engage_pages(spark, opts), token
-            )
+            pages = _mixpanel_engage_pages(spark, opts)
+            plan.profiles = mp_engage_profiles(pages, token)
+            plan.cached.append(pages)
         return plan
 
     raise ValueError(f"unknown source: {name!r}")
 
 
-def _mixpanel_export_raw(spark: SparkSession, opts: dict) -> DataFrame:
-    """/export fetch+read -> validated raw {event, properties} rows.
-    Shared by the forward (mixpanel->mixpanel) build and the reverse-ETL
-    path, which reshapes the RAW export rows (load/sendOther.js)."""
+def _mixpanel_export_read(spark: SparkSession, opts: dict) -> DataFrame:
+    """/export fetch+read -> the cached raw {event, properties} read
+    (``valid_records`` gives its good rows). Shared by the forward
+    (mixpanel->mixpanel) build and the reverse-ETL path, which reshapes
+    the RAW export rows (load/sendOther.js)."""
     from tomixpanel_spark.sources.mixpanel import MixpanelExportSource
-    from tomixpanel_spark.sources.staging import valid_records
 
     source = MixpanelExportSource(
         api_secret=opts.get("api_secret", ""),
@@ -182,7 +188,7 @@ def _mixpanel_export_raw(spark: SparkSession, opts: dict) -> DataFrame:
         http=opts.get("http"),
     )
     path = opts.get("path") or source.fetch()
-    return valid_records(source.read(spark, path))
+    return source.read(spark, path)
 
 
 def _mixpanel_engage_pages(spark: SparkSession, opts: dict) -> DataFrame:
@@ -234,7 +240,6 @@ def run(
     dest_name = str(config.get("destination", {}).get("name", "mixpanel")).lower()
     if dest_name in ("amplitude", "woopra"):
         return _run_reverse(spark, config, dest_name, transport, concurrency)
-    plan = build(spark, config)
     dest = config.get("destination", {})
     dopts = dest.get("options", {})
     base = HttpSinkConfig(
@@ -253,27 +258,31 @@ def run(
             partition_events=(name == "events"),
         )
 
+    plan = build(spark, config)
     summary = {}
-    if plan.events is not None:
-        summary["events"] = _load(
-            "events", plan.events, HttpSink(base, mp_event_record, transport)
-        )
-    if plan.profiles is not None:
-        pcfg = HttpSinkConfig(
-            url=dopts.get("engage_url", MIXPANEL_ENGAGE_URL),
-            headers=dopts.get("headers", {}),
-            max_records=dopts.get("profilesPerBatch", 2000),
-            gzip=base.gzip,
-            strict=False,  # /engage has no strict param (K5)
-            min_interval_s=base.min_interval_s,
-        )
-        summary["profiles"] = _load(
-            "profiles", plan.profiles, HttpSink(pcfg, mp_profile_record, transport)
-        )
-    if plan.merges is not None:
-        summary["merges"] = _load(
-            "merges", plan.merges, HttpSink(base, mp_merge_record, transport)
-        )
+    try:
+        if plan.events is not None:
+            summary["events"] = _load(
+                "events", plan.events, HttpSink(base, mp_event_record, transport)
+            )
+        if plan.profiles is not None:
+            pcfg = HttpSinkConfig(
+                url=dopts.get("engage_url", MIXPANEL_ENGAGE_URL),
+                headers=dopts.get("headers", {}),
+                max_records=dopts.get("profilesPerBatch", 2000),
+                gzip=base.gzip,
+                strict=False,  # /engage has no strict param (K5)
+                min_interval_s=base.min_interval_s,
+            )
+            summary["profiles"] = _load(
+                "profiles", plan.profiles, HttpSink(pcfg, mp_profile_record, transport)
+            )
+        if plan.merges is not None:
+            summary["merges"] = _load(
+                "merges", plan.merges, HttpSink(base, mp_merge_record, transport)
+            )
+    finally:
+        _release(plan.cached)
     return summary
 
 
@@ -284,6 +293,13 @@ def _save_dir(dopts: dict) -> Optional[str]:
     if not dopts.get("save_dir"):
         raise ValueError("destination.options.save_local_copy requires save_dir")
     return dopts["save_dir"]
+
+
+def _release(cached: list) -> None:
+    """Unpersist the source reads a run cached, once its summaries are in
+    (unpersisting runs no Spark job)."""
+    for df in cached:
+        df.unpersist()
 
 
 def _checkpointed_send(
@@ -372,58 +388,63 @@ def _run_reverse(
     # file and keeps it under save_local_copy)
     save_dir = _save_dir(dopts)
 
-    raw = _mixpanel_export_raw(spark, opts)
+    read = _mixpanel_export_read(spark, opts)
+    cached = [read]
+    raw = valid_records(read)
     do_people = bool(opts.get("doPeople") or opts.get("people"))
     summary: dict = {}
-    if dest_name == "amplitude":
-        from tomixpanel_spark.sinks.reverse import (
-            AMPLITUDE_HTTP_API,
-            AMPLITUDE_IDENTIFY_API,
-            amplitude_events_sink,
-            amplitude_users_sink,
-        )
-
-        api_key = dest.get("api_key") or dest.get("token") or ""
-        ev_sink = amplitude_events_sink(
-            api_key,
-            url=dopts.get("httpapi_url", AMPLITUDE_HTTP_API),
-            transport=transport,
-            pacing_s=dopts.get("pacing_s", 2.0),
-        )
-        summary["events"] = _checkpointed_send(
-            "events", mp_to_amplitude_events(raw), ev_sink,
-            save_dir, concurrency,
-        )
-        if do_people:
-            profiles = mp_engage_profiles(
-                _mixpanel_engage_pages(spark, opts), dest.get("token")
+    try:
+        if dest_name == "amplitude":
+            from tomixpanel_spark.sinks.reverse import (
+                AMPLITUDE_HTTP_API,
+                AMPLITUDE_IDENTIFY_API,
+                amplitude_events_sink,
+                amplitude_users_sink,
             )
-            us_sink = amplitude_users_sink(
+
+            api_key = dest.get("api_key") or dest.get("token") or ""
+            ev_sink = amplitude_events_sink(
                 api_key,
-                url=dopts.get("identify_url", AMPLITUDE_IDENTIFY_API),
+                url=dopts.get("httpapi_url", AMPLITUDE_HTTP_API),
                 transport=transport,
                 pacing_s=dopts.get("pacing_s", 2.0),
             )
-            summary["users"] = _checkpointed_send(
-                "users", mp_to_amplitude_users(profiles), us_sink,
+            summary["events"] = _checkpointed_send(
+                "events", mp_to_amplitude_events(raw), ev_sink,
                 save_dir, concurrency,
             )
-        return summary
+            if do_people:
+                pages = _mixpanel_engage_pages(spark, opts)
+                cached.append(pages)
+                profiles = mp_engage_profiles(pages, dest.get("token"))
+                us_sink = amplitude_users_sink(
+                    api_key,
+                    url=dopts.get("identify_url", AMPLITUDE_IDENTIFY_API),
+                    transport=transport,
+                    pacing_s=dopts.get("pacing_s", 2.0),
+                )
+                summary["users"] = _checkpointed_send(
+                    "users", mp_to_amplitude_users(profiles), us_sink,
+                    save_dir, concurrency,
+                )
+            return summary
 
-    from tomixpanel_spark.sinks.reverse import WOOPRA_IMPORT_URL, woopra_sink
+        from tomixpanel_spark.sinks.reverse import WOOPRA_IMPORT_URL, woopra_sink
 
-    project = dest.get("project") or dest.get("domain") or ""
-    sink = woopra_sink(
-        project,
-        url=dopts.get("url", WOOPRA_IMPORT_URL),
-        transport=transport,
-        username=dest.get("username", dest.get("service_account_user", "")),
-        password=dest.get("password", dest.get("service_account_pass", "")),
-    )
-    summary["events"] = _checkpointed_send(
-        "events", mp_to_woopra_events(raw, project), sink,
-        save_dir, concurrency,
-    )
+        project = dest.get("project") or dest.get("domain") or ""
+        sink = woopra_sink(
+            project,
+            url=dopts.get("url", WOOPRA_IMPORT_URL),
+            transport=transport,
+            username=dest.get("username", dest.get("service_account_user", "")),
+            password=dest.get("password", dest.get("service_account_pass", "")),
+        )
+        summary["events"] = _checkpointed_send(
+            "events", mp_to_woopra_events(raw, project), sink,
+            save_dir, concurrency,
+        )
+    finally:
+        _release(cached)
     if do_people:
         summary["users"] = {"skipped": "woopra users unsupported upstream"}
     return summary
